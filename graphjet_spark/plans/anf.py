@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphjet_spark.plans.checkpoints import CheckpointManager, SuperstepState
+
 # P(first 1-bit at position k) = 2^-(k+1); E[2^R] ~ n / PHI
 ANF_PHI = 0.77351
 
@@ -55,7 +57,7 @@ def anf_sketch_histogram(
     r: int = 8,
     iters: int = 5,
     partitions: int | None = None,
-    checkpoint: "CheckpointManager | None" = None,
+    checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
     """Run ``iters`` ANF supersteps with ``r`` FM sketches per vertex;
     return the exact integer histogram ``(t, sketch_sum, cnt)`` where
@@ -104,50 +106,21 @@ def anf_sketch_histogram(
             )
         )
 
-    def commit(t: int, st: DataFrame) -> DataFrame:
-        if checkpoint is None:
-            return st
-        rows = st.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        committed = checkpoint.commit_state(
-            t,
-            st,
-            {
-                "algo": "anf",
-                "rows": sum(x["rows"] for x in rows),
-                "partitions": [
-                    {"partition_id": x["partition_id"], "rows": x["rows"]}
-                    for x in rows
-                ],
-            },
-        )
-        return spark.read.parquet(committed)
-
-    start_t = 0
-    state = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_t = min(last, iters)
-            state = checkpoint.read_state(spark, start_t)
+    loop = SuperstepState(spark, checkpoint, "anf", iters)
+    state = loop.resume()
     if state is None:
-        state = vertices.select(
-            "id",
-            *[F.expr(_mask_expr(j)).alias(c) for j, c in enumerate(mcols)],
-        ).localCheckpoint(eager=True)
-        state = commit(0, state)
+        state, _ = loop.materialize(
+            0,
+            vertices.select(
+                "id",
+                *[F.expr(_mask_expr(j)).alias(c) for j, c in enumerate(mcols)],
+            ),
+        )
 
     # histograms for hops already on disk (resume) or just the initial
-    out = [
-        hist(
-            t,
-            checkpoint.read_state(spark, t) if checkpoint is not None else state,
-        )
-        for t in range(0, start_t)
-    ]
-    out.append(hist(start_t, state))
-    for t in range(start_t + 1, iters + 1):
+    out = [hist(t, loop.committed(t)) for t in range(loop.start)]
+    out.append(hist(loop.start, state))
+    for it in loop.steps():
         gathered = (
             e.join(state, e.dst == state.id)
             .groupBy("src")
@@ -167,10 +140,9 @@ def anf_sketch_histogram(
                 ],
             )
             .repartition(partitions, "id")
-            .localCheckpoint(eager=True)
         )
-        state = commit(t, state)
-        out.append(hist(t, state))
+        state, _ = loop.materialize(it + 1, state)
+        out.append(hist(it + 1, state))
     res = out[0]
     for h in out[1:]:
         res = res.unionByName(h)

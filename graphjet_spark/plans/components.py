@@ -11,12 +11,13 @@ map-side partial combine so mega-hub vertices never concentrate rows.
 
 from __future__ import annotations
 
-import time
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphjet_spark.plans.checkpoints import CheckpointManager
+from graphjet_spark.plans.checkpoints import CheckpointManager, SuperstepState
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -52,20 +53,16 @@ def connected_components(
     )
     vertices = sym.select(F.col("a").alias("id")).distinct()
 
-    start_iter = 0
-    labels = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = last
-            labels = checkpoint.read_state(spark, last)
+    total = fixed_iters if fixed_iters is not None else max_iter
+    loop = SuperstepState(spark, checkpoint, "connected_components", total)
+    labels = loop.resume()
     if labels is None:
         labels = vertices.select("id", F.col("id").alias("comp"))
         labels = labels.localCheckpoint(eager=True)
 
-    total = fixed_iters if fixed_iters is not None else max_iter
-    for it in range(start_iter, total):
-        t0 = time.time()
+    converge = fixed_iters is None
+    changed = F.sum(F.when(F.col("comp") != F.col("prev"), 1).otherwise(0))
+    for it in loop.steps():
         mins = (
             sym.join(labels, sym.b == labels.id)
             .groupBy("a")
@@ -80,33 +77,10 @@ def connected_components(
                 "prev",
             )
         )
-        # lazy checkpoint: the stats collect is the materializing action
-        new = new.localCheckpoint(eager=False)
-        stats = (
-            new.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.when(F.col("comp") != F.col("prev"), 1).otherwise(0)).alias(
-                    "changed"
-                ),
-            )
-            .collect()
+        labels, totals = loop.materialize(
+            it + 1, new, ("id", "comp"), {"changed": (changed, sum)}, converge
         )
-        changed = sum(r["changed"] for r in stats)
-        labels = new.select("id", "comp")
-        if checkpoint is not None:
-            metrics = {
-                "algo": "connected_components",
-                "rows": sum(r["rows"] for r in stats),
-                "changed": changed,
-                "elapsed_s": time.time() - t0,
-                "partitions": [
-                    {"partition_id": r["partition_id"], "rows": r["rows"]} for r in stats
-                ],
-            }
-            committed = checkpoint.commit_state(it + 1, labels, metrics)
-            labels = spark.read.parquet(committed)
-        if fixed_iters is None and changed == 0:
+        if converge and totals["changed"] == 0:
             break
 
     sym.unpersist()
@@ -197,37 +171,30 @@ def connected_components_star(
         .persist()
     )
 
-    start_round = 0
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_round = last
-            pairs = checkpoint.read_state(spark, last).select("u", "v")
+    loop = SuperstepState(
+        spark, checkpoint, "connected_components_star", max_rounds
+    )
+    resumed = loop.resume()
+    if resumed is not None:
+        pairs = resumed
 
+    # fixed-point signature: count + order-independent XOR checksum
+    # (bit_xor never overflows, unlike a sum of 64-bit hashes)
+    checksum = (
+        F.expr("bit_xor(xxhash64(u, v))"),
+        lambda v: reduce(operator.xor, v, 0),
+    )
     prev_sig = None
-    rounds_run = start_round
-    for rnd in range(start_round, max_rounds):
-        t0 = time.time()
-        new = _small_star(_large_star(pairs)).localCheckpoint(eager=False)
-        # fixed-point signature: count + order-independent XOR checksum
-        # (bit_xor never overflows, unlike a sum of 64-bit hashes)
-        sig_row = new.agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["cnt"], sig_row["h"])
-        pairs = new
+    rounds_run = loop.start
+    for rnd in loop.steps():
+        pairs, totals = loop.materialize(
+            rnd + 1,
+            _small_star(_large_star(pairs)),
+            aggs={"checksum": checksum},
+            converge=True,
+        )
+        sig = (totals["rows"], totals["checksum"])
         rounds_run = rnd + 1
-        if checkpoint is not None:
-            metrics = {
-                "algo": "connected_components_star",
-                "rows": sig[0],
-                "elapsed_s": time.time() - t0,
-            }
-            committed = checkpoint.commit_state(rnd + 1, pairs, metrics)
-            pairs = spark.read.parquet(committed)
         if sig == prev_sig:
             break
         prev_sig = sig

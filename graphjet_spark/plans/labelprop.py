@@ -14,12 +14,10 @@ full neighbor list.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphjet_spark.plans.checkpoints import CheckpointManager
+from graphjet_spark.plans.checkpoints import CheckpointManager, SuperstepState
 from graphjet_spark.plans.components import symmetrize
 
 
@@ -45,21 +43,15 @@ def label_propagation(
         .persist()
     )
 
-    start_iter = 0
-    labels = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = last
-            labels = checkpoint.read_state(spark, last)
+    loop = SuperstepState(spark, checkpoint, "label_propagation", iters)
+    labels = loop.resume()
     if labels is None:
         labels = sym.select(F.col("a").alias("id")).distinct().select(
             "id", F.col("id").alias("lbl")
         )
         labels = labels.localCheckpoint(eager=True)
 
-    for it in range(start_iter, iters):
-        t0 = time.time()
+    for it in loop.steps():
         new = (
             sym.join(labels, sym.b == labels.id)
             .groupBy("a", "lbl")
@@ -72,16 +64,7 @@ def label_propagation(
             )
             .select(F.col("a").alias("id"), (-F.col("best.neg_lbl")).alias("lbl"))
         )
-        new = new.localCheckpoint(eager=True)
-        labels = new
-        if checkpoint is not None:
-            metrics = {
-                "algo": "label_propagation",
-                "iteration": it + 1,
-                "elapsed_s": time.time() - t0,
-            }
-            committed = checkpoint.commit_state(it + 1, labels, metrics)
-            labels = spark.read.parquet(committed)
+        labels, _ = loop.materialize(it + 1, new)
 
     sym.unpersist()
     return labels.select("id", F.col("lbl").alias("label"))

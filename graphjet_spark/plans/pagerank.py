@@ -18,23 +18,19 @@ Scale design (the part that must survive 100 TB):
   salted two-phase aggregation (``skew_salt``) is additionally available
   and equivalent (tested); AQE skew-join splitting handles hub ``src``
   keys on the join side.
-- Dangling mass is one scalar aggregate per superstep (unavoidable), and
-  convergence (L∞/L1 delta) + per-partition lineage stats are computed
-  in a single pass over the checkpointed new state.
-- Lineage is truncated every superstep: via the checkpoint parquet
-  round-trip when a :class:`CheckpointManager` is supplied (also giving
-  mid-run resume), else via ``localCheckpoint`` — a naive loop's plan
-  grows exponentially and stalls Catalyst by iteration ~20.
+- Dangling mass is one scalar aggregate per superstep (unavoidable),
+  folded lazily into the superstep plan; the L∞/L1 deltas and the
+  dangling mass are the extra per-partition aggregates this module hands
+  to :class:`~graphjet_spark.plans.checkpoints.SuperstepState`, which
+  owns state placement, resume and the lineage-metrics row.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphjet_spark.plans.checkpoints import CheckpointManager
+from graphjet_spark.plans.checkpoints import CheckpointManager, SuperstepState
 
 
 def _prepare(
@@ -167,13 +163,9 @@ def pagerank(
             ).persist()
         tele.count()
 
-    start_iter = 0
-    ranks = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = last
-            ranks = checkpoint.read_state(spark, last).select("id", "rank")
+    total_iters = fixed_iters if fixed_iters is not None else max_iter
+    loop = SuperstepState(spark, checkpoint, "pagerank", total_iters)
+    ranks = loop.resume()
     if ranks is None:
         if warm_start is not None:
             padded = vertices.join(
@@ -191,10 +183,14 @@ def pagerank(
             ranks = vertices.select("id", F.lit(1.0 / n_f).alias("rank"))
         ranks = ranks.localCheckpoint(eager=True)
 
-    total_iters = fixed_iters if fixed_iters is not None else max_iter
-
-    for it in range(start_iter, total_iters):
-        t0 = time.time()
+    converge = fixed_iters is None
+    delta = F.abs(F.col("rank") - F.col("prev_rank"))
+    stats = {
+        "delta_linf": (F.max(delta), lambda v: max(v, default=0.0)),
+        "delta_l1": (F.sum(delta), sum),
+        "dangling_mass": (F.max("dm"), lambda v: max(v, default=0.0)),
+    }
+    for it in loop.steps():
         # Dangling mass as a lazy single-row aggregate broadcast into the
         # superstep plan — no separate driver action/job per iteration.
         dm_df = (
@@ -255,55 +251,10 @@ def pagerank(
             )
         )
 
-        # lazy checkpoint: the materializing action below is the single
-        # pass over new_ranks
-        new_ranks = new_ranks.localCheckpoint(eager=False)
-
-        need_stats = checkpoint is not None or fixed_iters is None
-        if need_stats:
-            stats = (
-                new_ranks.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.max(F.abs(F.col("rank") - F.col("prev_rank"))).alias("d_linf"),
-                    F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("d_l1"),
-                    F.first("dm").alias("dm"),
-                )
-                .collect()
-            )
-            delta_linf = max((r["d_linf"] for r in stats), default=0.0)
-            metrics = {
-                "algo": "pagerank",
-                "rows": sum(r["rows"] for r in stats),
-                "edges": None,
-                "dangling_mass": stats[0]["dm"] if stats else 0.0,
-                "delta_linf": delta_linf,
-                "delta_l1": sum(r["d_l1"] for r in stats),
-                "elapsed_s": time.time() - t0,
-                "partitions": [
-                    {
-                        "partition_id": r["partition_id"],
-                        "rows": r["rows"],
-                        "delta_l1": r["d_l1"],
-                    }
-                    for r in stats
-                ],
-            }
-        else:
-            # fixed-iteration fire-and-forget mode (benchmarks): no
-            # convergence scan — materialize via a cheap count only
-            # (measured: batching actions every 2nd superstep does NOT
-            # help — the cost is superstep compute, not job scheduling)
-            new_ranks.count()
-            delta_linf = None
-            metrics = None
-
-        ranks = new_ranks.select("id", "rank")
-        if checkpoint is not None:
-            committed = checkpoint.commit_state(it + 1, ranks, metrics)
-            ranks = spark.read.parquet(committed)
-
-        if fixed_iters is None and delta_linf is not None and delta_linf < tol:
+        ranks, totals = loop.materialize(
+            it + 1, new_ranks, ("id", "rank"), stats, converge
+        )
+        if converge and totals["delta_linf"] < tol:
             break
 
     if tele is not None:
@@ -364,39 +315,14 @@ def ppr_grouped(
     )
     seed_df.count()
 
-    def _commit(it: int, st: DataFrame) -> DataFrame:
-        if checkpoint is None:
-            return st
-        rows = st.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        committed = checkpoint.commit_state(
-            it,
-            st,
-            {
-                "algo": "ppr_grouped",
-                "rows": sum(x["rows"] for x in rows),
-                "partitions": [
-                    {"partition_id": x["partition_id"], "rows": x["rows"]}
-                    for x in rows
-                ],
-            },
-        )
-        return spark.read.parquet(committed)
-
-    start_iter = 0
-    state = None
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            start_iter = min(last, fixed_iters)
-            state = checkpoint.read_state(spark, start_iter)
+    loop = SuperstepState(spark, checkpoint, "ppr_grouped", fixed_iters)
+    state = loop.resume()
     if state is None:
         state = seed_df.select(
             "seed", F.col("seed").alias("id"), F.lit(1.0).alias("rank")
         ).localCheckpoint(eager=True)
 
-    for _it in range(start_iter, fixed_iters):
+    for it in loop.steps():
         contribs = (
             state.join(links, state.id == links.src)
             .groupBy("seed", "dst")
@@ -433,9 +359,8 @@ def ppr_grouped(
                 ).alias("rank"),
             )
             .repartition(partitions, "id")
-            .localCheckpoint(eager=True)
         )
-        state = _commit(_it + 1, state)
+        state, _ = loop.materialize(it + 1, state)
 
     from pyspark.sql import Window
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphjet_spark.plans.checkpoints import CheckpointManager, SuperstepState
+
 
 def strongly_connected_components(
     spark: SparkSession,
@@ -40,7 +42,7 @@ def strongly_connected_components(
     *,
     max_rounds: int = 30,
     partitions: int | None = None,
-    checkpoint: "CheckpointManager | None" = None,
+    checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
     """Returns ``(id, scc)``; ``scc`` = min vertex id in the SCC.
 
@@ -74,22 +76,17 @@ def strongly_connected_components(
     )
     done = [self_only.select("id", F.col("id").alias("scc"))]
 
-    start_round = 0
-    if checkpoint is not None:
-        last = checkpoint.last_committed()
-        if last is not None:
-            st = checkpoint.read_state(spark, last)
-            done = [
-                st.where(F.col("final") == 1).select("id", "scc")
-            ]
-            remaining = (
-                st.where(F.col("final") == 0)
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            start_round = last
+    loop = SuperstepState(spark, checkpoint, "scc", max_rounds)
+    st = loop.resume()
+    if st is not None:
+        done = [st.where(F.col("final") == 1).select("id", "scc")]
+        remaining = (
+            st.where(F.col("final") == 0).select("id").localCheckpoint(eager=True)
+        )
 
     def _commit(round_idx: int) -> None:
+        # without a manager the round's state stays as the inner loops
+        # left it (already localCheckpointed): no extra action per round
         if checkpoint is None:
             return
         acc = done[0]
@@ -100,25 +97,10 @@ def strongly_connected_components(
                 "id", F.col("id").alias("scc"), F.lit(0).alias("final")
             )
         )
-        rows = st.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        committed = checkpoint.commit_state(
-            round_idx,
-            st,
-            {
-                "algo": "scc",
-                "rows": sum(x["rows"] for x in rows),
-                "partitions": [
-                    {"partition_id": x["partition_id"], "rows": x["rows"]}
-                    for x in rows
-                ],
-            },
-        )
-        re = spark.read.parquet(committed)
-        done[:] = [re.where(F.col("final") == 1).select("id", "scc")]
+        st, _ = loop.materialize(round_idx, st)
+        done[:] = [st.where(F.col("final") == 1).select("id", "scc")]
 
-    for _round in range(start_round, max_rounds):
+    for _round in loop.steps():
         if remaining.limit(1).count() == 0:
             break
         er = (

@@ -131,8 +131,12 @@ def main() -> int:
     q = ingest.write_edge_segments(stream, out_dir, ck_dir)
     for t in ts:
         t.start()
-    # availableNow drains every staged file exactly-once, then stops
-    q.awaitTermination(max_seconds)
+    # availableNow drains every staged file exactly-once, then stops;
+    # on timeout the query is still running and must be stopped before
+    # its work dir is removed (the JSON then says drained=false)
+    drained = q.awaitTermination(max_seconds)
+    if not drained:
+        q.stop()
     drain_s = time.time() - t0
     stop_flag.set()
     for t in ts:
@@ -164,6 +168,7 @@ def main() -> int:
                 "ingested_edges": ingested,
                 "expected_links": n_links,
                 "ingest_drain_s": round(drain_s, 1),
+                "drained": drained,
                 "batch_build_edges_per_sec": round(built / batch_s, 1),
                 "batch_built_edges": built,
                 "batch_s": round(batch_s, 1),

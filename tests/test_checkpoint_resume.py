@@ -6,20 +6,42 @@ run."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import pytest
 
 from graphjet_spark.plans.checkpoints import CheckpointManager
 from pyspark.sql.functions import col as F_col
 
+from graphjet_spark.plans.labelprop import label_propagation
 from graphjet_spark.plans.pagerank import pagerank
 
 from .conftest import edges_df
 
 PAIRS = [(1, 2), (2, 3), (3, 4), (4, 1), (2, 5), (5, 6), (6, 5), (1, 5), (6, 2)]
+# triangle plus tail: LP labels are still moving after 2 steps
+LP_PAIRS = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 7)]
 
 
 def _ranks(df):
     return {r["id"]: r["pagerank"] for r in df.collect()}
+
+
+def _labels(df):
+    return {r["id"]: r["label"] for r in df.collect()}
+
+
+def _assert_lineage(mgr):
+    """Every committed superstep has a full lineage-metrics row."""
+    rows = mgr.read_metrics()
+    assert rows
+    for m in rows:
+        assert {"iteration", "rows", "elapsed_s"} <= m.keys(), m
+        assert m["partitions"], m
+        assert all(
+            {"partition_id", "rows"} <= p.keys() for p in m["partitions"]
+        )
 
 
 def test_resume_matches_uninterrupted(spark, tmp_path):
@@ -44,6 +66,7 @@ def test_resume_matches_uninterrupted(spark, tmp_path):
     assert all(m["partitions"] and "delta_l1" in m["partitions"][0] for m in rows)
     # convergence metrics monotone-ish: final delta far below first
     assert rows[-1]["delta_linf"] < rows[0]["delta_linf"]
+    _assert_lineage(mgr)
 
 
 def test_cc_resume_matches_uninterrupted(spark, tmp_path):
@@ -64,6 +87,7 @@ def test_cc_resume_matches_uninterrupted(spark, tmp_path):
         ).collect()
     }
     assert resumed == full
+    _assert_lineage(mgr)
 
 
 def test_cc_star_resume_matches_uninterrupted(spark, tmp_path):
@@ -85,6 +109,32 @@ def test_cc_star_resume_matches_uninterrupted(spark, tmp_path):
     }
     assert resumed == full
     assert mgr.last_committed() > 2  # it actually continued
+    _assert_lineage(mgr)
+
+
+def test_lp_resume_matches_uninterrupted(spark, tmp_path):
+    e = edges_df(spark, LP_PAIRS)
+    full = _labels(label_propagation(spark, e, iters=4))
+    mgr = CheckpointManager(str(tmp_path), "lp")
+    label_propagation(spark, e, iters=2, checkpoint=mgr).collect()
+    assert mgr.last_committed() == 2
+    resumed = _labels(label_propagation(spark, e, iters=4, checkpoint=mgr))
+    assert mgr.last_committed() == 4
+    assert resumed == full
+    _assert_lineage(mgr)
+
+
+def test_resume_clamps_to_budget(spark, tmp_path):
+    """A manager already holding 4 iterations, called with ``iters=2``,
+    must return the 2-step state (LP's "exactly ``iters`` synchronous
+    steps" contract), not the later iteration-4 state."""
+    e = edges_df(spark, LP_PAIRS)
+    two = _labels(label_propagation(spark, e, iters=2))
+    assert two != _labels(label_propagation(spark, e, iters=4))
+    mgr = CheckpointManager(str(tmp_path), "lp")
+    label_propagation(spark, e, iters=4, checkpoint=mgr).collect()
+    assert mgr.last_committed() == 4
+    assert _labels(label_propagation(spark, e, iters=2, checkpoint=mgr)) == two
 
 
 def test_commit_is_idempotent_and_atomic(spark, tmp_path):
@@ -159,6 +209,7 @@ def test_anf_resume_matches_uninterrupted(spark, tmp_path):
     }
     assert resumed == full
     assert ck.last_committed() == 4
+    _assert_lineage(ck)
 
 
 def test_ppr_grouped_resume_matches_uninterrupted(spark, tmp_path):
@@ -190,6 +241,7 @@ def test_ppr_grouped_resume_matches_uninterrupted(spark, tmp_path):
     )
     assert resumed == full
     assert ck.last_committed() == 5
+    _assert_lineage(ck)
 
 
 def test_scc_resume_matches_uninterrupted(spark, tmp_path):
@@ -223,3 +275,20 @@ def test_scc_resume_matches_uninterrupted(spark, tmp_path):
         ).collect()
     )
     assert resumed == full
+    _assert_lineage(ck)
+
+
+def test_superstep_state_has_one_owner():
+    """Superstep commit/resume calls live only in plans/checkpoints.py,
+    so the next checkpointed loop uses ``SuperstepState``, not a copy."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    plans = root / "graphjet_spark" / "plans"
+    pat = re.compile(r"\b(commit_state|last_committed|read_state)\b")
+    offenders = [
+        f"{p.name}:{i}"
+        for p in sorted(plans.glob("*.py"))
+        if p.name != "checkpoints.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert offenders == []

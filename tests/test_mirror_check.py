@@ -341,6 +341,20 @@ def test_mirror_simhash_matches_bruteforce():
     assert got == want and len(got) > 0
 
 
+def test_mirrors_handle_corpus_without_shingles():
+    """An empty corpus, or one where every text is shorter than the
+    shingle: the dedup mirrors return empty results (every doc keeps
+    itself), not an IndexError."""
+    mc = _load()
+    for doc_ids, texts in [
+        (np.empty(0, np.int64), []),
+        (np.array([1, 2, 3], np.int64), ["", "a", "b"]),
+    ]:
+        assert all(len(x) == 0 for x in mc.mirror_minhash(doc_ids, texts))
+        assert all(len(x) == 0 for x in mc.mirror_simhash(doc_ids, texts))
+        assert np.array_equal(mc.mirror_keep_list(doc_ids, texts), doc_ids)
+
+
 def test_mirror_keep_list_matches_bruteforce():
     import itertools
 

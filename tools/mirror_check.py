@@ -431,13 +431,15 @@ def mirror_minhash(doc_ids, texts, *, num_hashes=128, shingle_n=3,
     a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.uint64).astype(np.int64)
     b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.uint64).astype(np.int64)
     grams = _doc_grams(texts, shingle_n)
-    keep = np.array([len(g) > 0 for g in grams])
+    keep = np.array([len(g) > 0 for g in grams], dtype=bool)
     ids = doc_ids[keep]
+    nd = len(ids)
+    if nd == 0:  # no doc yields a shingle: reduceat needs >= 1 element
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
     arrs = [g % _MERSENNE for g, k in zip(grams, keep) if k]
     lens = np.array([len(x) for x in arrs], dtype=np.int64)
-    flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
+    flat = np.concatenate(arrs)
     offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    nd = len(ids)
     sig = np.empty((nd, num_hashes), dtype=np.int64)
     for i in range(num_hashes):
         vals = (a[i] * flat + b[i]) % _MERSENNE
@@ -481,13 +483,15 @@ def mirror_simhash(doc_ids, texts, *, max_hamming=3, shingle_n=2):
     n_bands = max_hamming + 1
     width = 60 // n_bands
     grams = _doc_grams(texts, shingle_n)
-    keep = np.array([len(g) > 0 for g in grams])
+    keep = np.array([len(g) > 0 for g in grams], dtype=bool)
     ids = doc_ids[keep]
+    nd = len(ids)
+    if nd == 0:  # no doc yields a shingle: reduceat needs >= 1 element
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
     arrs = [g for g, k in zip(grams, keep) if k]
     lens = np.array([len(x) for x in arrs], dtype=np.int64)
-    flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
+    flat = np.concatenate(arrs)
     offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    nd = len(ids)
     fp = np.zeros(nd, dtype=np.int64)
     for bit in range(60):
         votes = np.add.reduceat(2 * ((flat >> bit) & 1) - 1, offsets)
@@ -563,7 +567,9 @@ def mirror_keep_list(doc_ids, texts, *, threshold=0.9, vocab_max=4096):
     num = int(round(den * threshold)) - 1
     src_e = []
     dst_e = []
-    chunk = max(1, (1 << 24) // max(1, n_cls))
+    # pair budget in uint64 words: a chunk materializes
+    # (chunk x n_cls x W) words, so the budget divides by the width W
+    chunk = max(1, (1 << 24) // (max(1, n_cls) * W))
     for s in range(0, n_cls, chunk):
         e = min(s + chunk, n_cls)
         inter = _pop64(uniq[s:e, None, :] & uniq[None, :, :]).sum(axis=2)
