@@ -3,8 +3,11 @@
 Five families, each scale-designed (the ``documents`` table at 100 TB):
 
 - exact:       hash-groupBy on content (JVM-side xxhash64, one shuffle);
-- n-gram Jaccard: prefix-filtered candidate generation (AllPairs /
-               SSJoin) + exact set overlap on candidates only;
+- n-gram Jaccard and containment: one set-similarity join core —
+               exact-dup class collapse, then exact intersections by
+               blocked bitset popcount, blocked posting-run match or
+               prefix-filtered (AllPairs / PPJoin) candidates, chosen
+               by vocabulary size;
 - MinHash+LSH: JVM-expression signatures over cross-engine md5-prefix
                shingle hashes, banded into LSH buckets, candidate pairs
                from bucket joins only — never all-pairs;
@@ -25,6 +28,8 @@ per-row Python.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -104,399 +109,530 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
 ) -> DataFrame:
-    """Near-dup pairs by exact n-gram Jaccard >= threshold, with
-    prefix-filtered candidate generation (Bayardo et al. WWW'07
-    AllPairs / Chaudhuri et al. ICDE'06 SSJoin).
-
-    Candidate pairs come from an inverted index over each document's
-    *prefix* tokens only: order every doc's tokens by ascending global
-    document frequency (rarest first, ties by token), keep the first
-    ``sz - ceil(t*sz) + 1``; any pair with Jaccard >= t provably shares
-    a prefix token, so recall is 1.0 by the prefix-filter theorem while
-    hot (stopword-grade) tokens — the quadratic fan-out at web scale —
-    land in suffixes and never generate candidates.  A size filter
-    (``t * max(|x|,|y|) <= min``) prunes further.  The float ceil uses a
-    1e-6 slack so prefixes only ever err longer (never missing pairs).
-    Exact Jaccard is then computed on candidates only.  Output
+    """Near-dup pairs by exact n-gram Jaccard >= threshold.  Output
     (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard rounded to 6.
-    """
-    classes, cls_pairs = _ngram_jaccard_class_pairs(
-        docs, n=n, threshold=threshold, text_col=text_col
-    )
 
-    # --- expand class pairs back to doc pairs ---------------------------
-    m = classes.select("doc_id", "cls")
-    inter_docs = (
-        cls_pairs.join(
-            m.select(F.col("cls").alias("ca"), F.col("doc_id").alias("da")), "ca"
-        )
-        .join(m.select(F.col("cls").alias("cb"), F.col("doc_id").alias("db")), "cb")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    m1 = m.alias("m1")
-    m2 = m.alias("m2")
-    intra_docs = (
-        m1.join(
-            m2,
-            (F.col("m1.cls") == F.col("m2.cls"))
-            & (F.col("m1.doc_id") < F.col("m2.doc_id")),
-        )
-        .select(
-            F.col("m1.doc_id").alias("doc_a"),
-            F.col("m2.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return inter_docs.unionByName(intra_docs)
+    Exact-duplicate token sets collapse into classes
+    (:func:`_class_structures`), qualifying class pairs come from the
+    set-similarity join core (:func:`_class_pairs`: bitset popcount,
+    blocked posting-run intersection or AllPairs/PPJoin prefix
+    filtering, chosen by vocabulary size) and expand back to member doc
+    pairs (:func:`_expand`)."""
+    m = _Measure("jaccard", threshold)
+    cs = _class_structures(docs, n=n, text_col=text_col)
+    return _expand(_class_pairs(cs, m), cs[0], m)
 
 
-# Dense-vocabulary regime bound for the bitset Jaccard path: V <= 256
-# token types = at most 4 words (32 bytes) per class bitset, so a block
-# pair's popcount work stays a few single-digit GB of word ops and the
-# per-class state is negligible.  Above this, the AllPairs/PPJoin
-# prefix-filtered path wins (and actually prunes).
+# ------------------------------------------- set-similarity join core
+#
+# n-gram Jaccard, the keep-lists and containment pairs/top-k run one
+# pipeline: exact-dup class collapse -> qualifying class pairs in one of
+# three regimes, chosen by the vocabulary size V alone -> class->doc
+# expansion.  A measure contributes only its score, its symmetry and
+# the bounds its filters use (_Measure).
+
+# Bitset regime bound: V <= 256 grams = at most 4 words (32 bytes) per
+# class bitset, so exact intersections over ALL class pairs by
+# popcount-AND beat any filter — on a dense vocabulary even the rarest
+# prefix gram is shared by a large fraction of all classes and prefix
+# candidates degenerate toward all-pairs (measured at sf1: V=40, 127.5M
+# candidates from 35k classes, 560s in the join + verify).
 _BITSET_VOCAB_MAX = 256
+
+# Blocked regime bound: up to this V, gram df is still high enough that
+# prefix filtering degenerates (measured: the sf10 dense-vocab
+# containment census spilled 127.5M+ candidates past a 78 GB disk),
+# while per-class posting arrays stay small enough that every block
+# pair is one in-task intersection with NO materialized candidate
+# relation.  Above it, real-web sparse vocabularies make the
+# AllPairs/PPJoin prefix filter actually prune.
+_BLOCK_VOCAB_MAX = 1 << 17
 
 # byte -> popcount lookup (numpy 1.26 has no bitwise_count)
 _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
 
-def _bitset_cls_pairs(
-    rtoks: DataFrame,
-    reps: DataFrame,
-    vocab: int,
-    threshold: float,
-    new_cls: DataFrame | None = None,
-) -> DataFrame:
-    """Exact Jaccard over ALL distinct class pairs for dense (small)
-    vocabularies: each class's token set becomes a W-word bitset
-    (W = ceil(V/64), global token ids assigned by sorted token order),
-    classes are hashed into blocks, and every block pair is one
-    cogrouped-Arrow task computing intersection = popcount(AND) over a
-    strip-chunked numpy outer product — the bitset analogue of
-    :func:`embedding_near_dups`' block GEMM.  No candidate relation is
-    ever materialized; per-task memory is bounded by the strip size.
-    Emits integer intersections; the final Jaccard and threshold are
-    evaluated JVM-side on exact (i, sza, szb) ints, so values are
-    byte-identical to the exploded-count path and to any SQL oracle.
+@dataclass(frozen=True)
+class _Measure:
+    """What a set-similarity measure contributes to the join core.
 
-    ``new_cls`` (delta-ingest mode): a (cls) relation restricting the
-    output to pairs with at least one side in it.  The block scheme
-    then pits the new classes (one side, replicated to every block)
-    against all classes — quadratic work is |new| x |all| instead of
-    |all|^2/2; same exact values.
-    """
-    n_words = (vocab + 63) // 64
-    from pyspark.sql import Window
+    ``col`` names the measure and its output column: ``jaccard``
+    i/(|A|+|B|-i) is symmetric, ``containment`` i/|A| (A contained in
+    B) is not.  The final JVM filter is round(score, round_to) >=
+    threshold, so a raw score as low as threshold - 0.5*10^-round_to
+    still qualifies; every in-task prefilter and every prefix, size and
+    positional bound uses ``t_lo``, which keeps exactly that (less a
+    float guard), so the filters only ever err toward keeping."""
 
-    tok_ids = (
-        rtoks.select("tok")
-        .distinct()
-        .withColumn(
-            "tid", F.row_number().over(Window.orderBy(F.asc("tok"))) - 1
-        )
-    )
-    words = (
-        rtoks.join(F.broadcast(tok_ids), "tok")
-        .select(
-            "cls",
-            (F.col("tid") / 64).cast("int").alias("wi"),
-            F.expr("shiftleft(1L, CAST(tid % 64 AS INT))").alias("wv"),
-        )
-        .groupBy("cls", "wi")
-        .agg(F.expr("bit_or(wv)").alias("w"))
-    )
-    masks = (
-        words.groupBy("cls")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("wi", "w"))).alias("wm")
-        )
-        .join(reps.select("cls", "sz"), "cls")
-        .select(
-            "cls",
-            "sz",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_words - 1)),
-                lambda i: F.coalesce(
-                    F.element_at("wm", i.cast("int")), F.lit(0).cast("long")
-                ),
-            ).alias("mask"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    n_cls = masks.count()
-    block_rows = 8192
-    n_blocks = max(1, -(-n_cls // block_rows))
-    blocked = masks.withColumn(
-        "blk", F.pmod(F.xxhash64("cls"), F.lit(n_blocks)).cast("int")
-    )
-    if new_cls is None:
-        # symmetric: triangular block-pair coverage
-        a_rep = blocked.select(
-            "cls", "sz", "mask", F.col("blk").alias("bi"),
-            F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("bj"),
-        )
-        b_rep = blocked.select(
-            "cls", "sz", "mask",
-            F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
-            F.col("blk").alias("bj"),
-        )
-    else:
-        # delta: the new classes (a side) are replicated to every block
-        # of the full corpus (b side) — |new| x |all| coverage; a
-        # new-new pair is evaluated in both orders (two tasks), deduped
-        # after min/max normalization below.  The checkpoint both breaks
-        # the blocked-vs-blocked self-join lineage (cogroup rejects the
-        # ambiguity) and materializes the batch-sized side once.
-        new_masks = blocked.join(new_cls, "cls").localCheckpoint(eager=True)
-        a_rep = new_masks.select(
-            "cls", "sz", "mask", F.lit(0).alias("bi"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("bj"),
-        )
-        b_rep = blocked.select(
-            "cls", "sz", "mask",
-            F.lit(0).alias("bi"), F.col("blk").alias("bj"),
-        )
-    symmetric = new_cls is None
-    # in-task prefilter with slack covering the final 6-decimal rounding:
-    # round(i/u, 6) >= t can hold when i/u is up to 5e-7 below t
-    t_eps = threshold - 1e-6
+    col: str
+    threshold: float
+    round_to: int = 6
 
-    def _popjoin(key, a_pdf: pd.DataFrame, b_pdf: pd.DataFrame):
-        if len(a_pdf) == 0 or len(b_pdf) == 0:
-            return pd.DataFrame({"ca": [], "cb": [], "i": []})
-        A = np.stack(a_pdf["mask"].to_numpy()).astype(np.uint64)
-        B = np.stack(b_pdf["mask"].to_numpy()).astype(np.uint64)
-        sa = a_pdf["sz"].to_numpy().astype(np.int64)
-        sb = b_pdf["sz"].to_numpy().astype(np.int64)
-        ids_a = a_pdf["cls"].to_numpy()
-        ids_b = b_pdf["cls"].to_numpy()
-        m, w = B.shape
-        strip = max(1, (1 << 22) // max(1, m * w))
-        out_a, out_b, out_i = [], [], []
-        for s in range(0, len(A), strip):
-            e = min(s + strip, len(A))
-            inter = (
-                _POP8[(A[s:e, None, :] & B[None, :, :]).view(np.uint8)]
-                .reshape(e - s, m, -1)
-                .sum(axis=2, dtype=np.int64)
-            )
-            # J = i/(sa+sb-i) >= t_eps  <=>  i*(1+t_eps) >= t_eps*(sa+sb)
-            ok = inter * (1.0 + t_eps) >= t_eps * (sa[s:e, None] + sb[None, :])
-            ia, ib = np.nonzero(ok)
-            out_a.append(ids_a[s + ia])
-            out_b.append(ids_b[ib])
-            out_i.append(inter[ia, ib])
-        ca = np.concatenate(out_a)
-        cb = np.concatenate(out_b)
-        ii = np.concatenate(out_i)
-        if symmetric and key[0] == key[1]:
-            # diagonal block: every distinct pair appears in both orders
-            keep = ca < cb
-            ca, cb, ii = ca[keep], cb[keep], ii[keep]
-        else:
-            drop = ca == cb
-            if drop.any():
-                ca, cb, ii = ca[~drop], cb[~drop], ii[~drop]
-        return pd.DataFrame(
-            {"ca": np.minimum(ca, cb), "cb": np.maximum(ca, cb), "i": ii}
-        )
+    @property
+    def symmetric(self) -> bool:
+        return self.col == "jaccard"
 
-    pairs = (
-        a_rep.groupby("bi", "bj")
-        .cogroup(b_rep.groupby("bi", "bj"))
-        .applyInPandas(_popjoin, schema="ca bigint, cb bigint, i bigint")
-    )
-    if not symmetric:
-        pairs = pairs.dropDuplicates(["ca", "cb"])
-    s1 = reps.select(F.col("cls").alias("ca"), F.col("sz").alias("sza"))
-    s2 = reps.select(F.col("cls").alias("cb"), F.col("sz").alias("szb"))
-    return (
-        pairs.join(s1, "ca")
-        .join(s2, "cb")
-        .select(
-            "ca",
-            "cb",
-            F.round(
-                F.col("i") / (F.col("sza") + F.col("szb") - F.col("i")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    @property
+    def t_lo(self) -> float:
+        return self.threshold - (0.5 * 10.0**-self.round_to + 1e-9)
+
+    @property
+    def tie_slack(self) -> float:
+        """Two raw scores that round to the same ``round_to`` decimals
+        differ by less than this."""
+        return 10.0**-self.round_to + 1e-9
+
+    def score(self, i, sa, sb):
+        """The measure over intersection ``i`` and the set sizes — numpy
+        arrays or Spark columns alike (both divide in float64)."""
+        return i / (sa + sb - i) if self.symmetric else i / sa
+
+    def min_overlap(self, sa, sb):
+        """The smallest intersection at which a pair can still qualify."""
+        t = self.t_lo
+        return (sa + sb) * (t / (1.0 + t)) if self.symmetric else sa * t
 
 
 def _class_structures(
     docs: DataFrame, *, n: int, text_col: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Shared exact-dup class collapse: (classes, reps, rtoks, dfreq).
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Exact-dup class collapse: (classes, reps, cgrams, rtoks, dfreq).
+
+    - classes: (doc_id, cls, sz, grams) per doc;
+    - reps: (cls, rep) per class, rep = its minimum doc_id;
+    - cgrams: (cls, sz, grams) per class, grams sorted;
+    - rtoks: (cls, sz, tok) per class gram; dfreq: (tok, df).
 
     Near-dup corpora are dominated by exact-dup classes; every member
-    of a class has identical Jaccard to everything else, so similarity
-    runs once per class (representative) and expands back to member
-    pairs by joins — the candidate join shrinks from (class size)^2 to
-    1 per class pair.  Class key = hash of the sorted token set, so
-    identical sets ingested at different times land in the SAME class
-    (what makes delta ingest exact).  Eager checkpoints: toks feeds 4
-    consumers and classes/rtoks feed 2-3 each — leaving them lazy
-    replicates the whole upstream chain into one giant plan (measured
-    3x slower from planning + recompute)."""
-    toks = token_sets(docs, text_col, n).localCheckpoint(eager=True)
+    of a class scores the same against everything else, so similarity
+    runs once per class and expands back to member pairs by joins — the
+    pair work shrinks from (class size)^2 to 1 per class pair (without
+    it the containment intersection fan-out hit AGGREGATE_OUT_OF_MEMORY
+    at sf1, where dup classes hold hundreds of docs).  Class key = hash
+    of the sorted gram list, so identical sets ingested at different
+    times land in the SAME class (what makes delta ingest exact).
+    Eager checkpoints: classes and cgrams each feed several consumers,
+    and leaving them lazy replicates the whole upstream chain into one
+    giant plan (measured 3x slower from planning + recompute)."""
     classes = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.xxhash64(
-                F.concat_ws("\x1f", F.sort_array(F.collect_list("tok")))
-            ).alias("cls"),
-            F.count(F.lit(1)).alias("sz"),
+        token_sets(docs, text_col, n)
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("tok")).alias("grams"))
+        .select(
+            "doc_id",
+            F.xxhash64(F.concat_ws("\x1f", "grams")).alias("cls"),
+            F.size("grams").alias("sz"),
+            "grams",
         )
         .localCheckpoint(eager=True)
     )
-    reps = classes.groupBy("cls").agg(
-        F.min("doc_id").alias("rep"), F.first("sz").alias("sz")
-    )
-    rtoks = (
-        toks.join(reps.select(F.col("rep").alias("doc_id"), "cls"), "doc_id")
-        .select("cls", "tok")
+    reps = classes.groupBy("cls").agg(F.min("doc_id").alias("rep"))
+    cgrams = (
+        classes.join(
+            reps.select(F.col("rep").alias("doc_id"), "cls"), ["cls", "doc_id"]
+        )
+        .select("cls", "sz", "grams")
         .localCheckpoint(eager=True)
     )
+    rtoks = cgrams.select("cls", "sz", F.explode("grams").alias("tok"))
     dfreq = rtoks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    return classes, reps, rtoks, dfreq
+    return classes, reps, cgrams, rtoks, dfreq
 
 
-def _jaccard_cls_pairs(
-    reps: DataFrame,
-    rtoks: DataFrame,
-    dfreq: DataFrame,
-    threshold: float,
+def _class_pairs(
+    cs: tuple[DataFrame, ...],
+    m: _Measure,
+    *,
     new_cls: DataFrame | None = None,
+    k: int | None = None,
 ) -> DataFrame:
-    """Qualifying distinct-class pairs ``(ca, cb, jaccard)`` with
-    ``ca < cb`` over the class structures — or, with ``new_cls``
-    (delta-ingest mode), only the pairs touching a new class.
+    """Qualifying distinct-class pairs ``(ca, cb, <m.col>)`` over the
+    :func:`_class_structures` ``cs`` — unordered as ca < cb for a
+    symmetric measure, ordered (ca in cb) for an asymmetric one.
 
-    Regime switch: prefix filtering is powerless on a dense (tiny)
-    vocabulary — with V token types shared by most documents, even the
-    rarest prefix token appears in a large fraction of all classes and
-    the candidate join degenerates toward all-pairs (measured at sf1:
-    V=40, 127.5M candidates from 35k classes, 560s in the join +
-    verify; 2-prefix pair keys are no better, 2.1B evaluations).  When
-    V is small enough that a class's whole token set fits a fixed
-    W-word bitset, exact Jaccard over ALL class pairs by blocked
-    popcount-AND is cheaper than any filter: O(C^2/2) single-word AND+
-    popcounts, embarrassingly parallel, no candidate relation at all.
-    Web-scale vocabularies (V in the millions) take the sparse path
-    below, where prefix selectivity is real."""
+    The regime is chosen here, from the vocabulary size V alone:
+
+    - V <= _BITSET_VOCAB_MAX: blocked bitset popcount;
+    - V <= _BLOCK_VOCAB_MAX: blocked posting-run intersection;
+    - otherwise: prefix/size/positional-filtered candidates, verified
+      by row-local ``array_intersect``.
+
+    Every regime yields exact integer intersections with both set
+    sizes; the score and the threshold are evaluated JVM-side on them,
+    so values are identical across regimes and to any SQL oracle.
+
+    ``new_cls`` (delta-ingest mode): a (cls) relation restricting the
+    output to pairs with at least one side in it — quadratic work
+    |new| x |all| instead of |all|^2/2, recall 1.0 in every regime.
+    ``k``: in-task top-k retention per contained class (blocked
+    regimes; the prefix regime emits the full census)."""
+    _, _, cgrams, _, dfreq = cs
     vocab = dfreq.count()
-    if vocab > 0 and vocab <= _BITSET_VOCAB_MAX:
-        return _bitset_cls_pairs(rtoks, reps, vocab, threshold, new_cls=new_cls)
+    if vocab > _BLOCK_VOCAB_MAX:
+        pairs = _prefix_cls_pairs(cs, m, new_cls)
+    else:
+        pairs = _blocked_cls_pairs(
+            cgrams, m, bitset=vocab <= _BITSET_VOCAB_MAX, new_cls=new_cls, k=k
+        )
+    score = F.round(m.score(F.col("i"), F.col("sza"), F.col("szb")), m.round_to)
+    return pairs.select("ca", "cb", score.alias(m.col)).filter(
+        F.col(m.col) >= m.threshold
+    )
 
+
+def _block_pair_cogroup(
+    rows: DataFrame,
+    id_col: str,
+    block_rows: int,
+    kernel,
+    schema: str,
+    new_ids: DataFrame | None = None,
+) -> DataFrame:
+    """Blocked all-pairs layout, shared by the class-pair kernel and
+    :func:`embedding_near_dups`: rows hash into
+    B = ceil(n / block_rows) blocks, and each of the B*(B+1)/2 block
+    pairs (bi <= bj) is ONE cogrouped-Arrow task
+    ``kernel((bi, bj), a_pdf, b_pdf)`` over block bi (a side) and block
+    bj (b side).  No pair relation is ever shuffled; per-task memory is
+    bounded by two blocks; each row is shuffled B times.  On the
+    diagonal (bi == bj) both sides hold the same rows.
+
+    ``new_ids`` (delta mode): the rows whose ``id_col`` is in it (a
+    side) are replicated to every block of the full set (b side) under
+    keys (0, bj) — |new| x |all| coverage, no diagonal; a new-new pair
+    is evaluated in both orders.  The new side is checkpointed: that
+    materializes it once and breaks the self-join lineage that cogroup
+    rejects as ambiguous."""
+    n_blocks = max(1, -(-rows.count() // block_rows))
+    cols = rows.columns
+    blocked = rows.withColumn(
+        "blk", F.pmod(F.xxhash64(id_col), F.lit(n_blocks)).cast("int")
+    )
+    # the b side re-aliases its columns: a cogroup of two projections of
+    # one relation otherwise hands the kernel the a side's attributes for
+    # both, and once a consumer leaves a kernel output column unused,
+    # column pruning drops the b side's payload (measured on Spark 4.1)
+    b_cols = [F.col(c).alias(c) for c in cols]
+    if new_ids is None:
+        a_rep = blocked.select(
+            *cols, F.col("blk").alias("bi"),
+            F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("bj"),
+        )
+        b_rep = blocked.select(
+            *b_cols,
+            F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
+            F.col("blk").alias("bj"),
+        )
+    else:
+        a_rep = (
+            rows.join(new_ids, id_col)
+            .localCheckpoint(eager=True)
+            .select(
+                *cols, F.lit(0).alias("bi"),
+                F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("bj"),
+            )
+        )
+        b_rep = blocked.select(*b_cols, F.lit(0).alias("bi"), F.col("blk").alias("bj"))
+    return (
+        a_rep.groupby("bi", "bj")
+        .cogroup(b_rep.groupby("bi", "bj"))
+        .applyInPandas(kernel, schema=schema)
+    )
+
+
+def _gather_ragged(
+    vals: np.ndarray, starts: np.ndarray, counts: np.ndarray
+) -> np.ndarray:
+    """Concatenate vals[starts[r] : starts[r]+counts[r]] over all r
+    without a Python loop (exclusive-cumsum index arithmetic)."""
+    total = int(counts.sum())
+    if total == 0:
+        return np.empty(0, dtype=vals.dtype)
+    excl = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    idx = np.arange(total, dtype=np.int64) + np.repeat(starts - excl, counts)
+    return vals[idx]
+
+
+def _postings(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """A block's gram postings ``(gram ids, owning row)``, by gram."""
+    gids = [np.asarray(g, dtype=np.int64) for g in pdf["gids"]]
+    grams = np.concatenate(gids)
+    rows = np.repeat(np.arange(len(gids), dtype=np.int64), [len(g) for g in gids])
+    order = np.argsort(grams, kind="stable")
+    return grams[order], rows[order]
+
+
+def _bitset_intersections(a, b, n_a: int, n_b: int) -> np.ndarray:
+    """Intersection counts (n_a x n_b int32) of two blocks' postings by
+    popcount(AND) over per-class bitsets of the pair's local vocabulary
+    (at most V grams, so at most V/64 words per class), strip-chunked
+    so the AND temporary stays ~32 MB."""
+    (ga, ra), (gb, rb) = a, b
+    vocab = np.unique(np.concatenate([ga, gb]))
+    w = -(-len(vocab) // 64)
+
+    def _bits(g, r, n):
+        t = np.searchsorted(vocab, g)
+        x = np.zeros(n * w, dtype=np.uint64)
+        # a class's grams are distinct, so adding its bits ORs them
+        bit = np.left_shift(np.uint64(1), (t % 64).astype(np.uint64))
+        np.add.at(x, r * w + t // 64, bit)
+        return x.reshape(n, w)
+
+    A, B = _bits(ga, ra, n_a), _bits(gb, rb, n_b)
+    M = np.empty((n_a, n_b), dtype=np.int32)
+    strip = max(1, (1 << 22) // (n_b * w))
+    for s in range(0, n_a, strip):
+        e = min(s + strip, n_a)
+        M[s:e] = (
+            _POP8[(A[s:e, None, :] & B[None, :, :]).view(np.uint8)]
+            .reshape(e - s, n_b, -1)
+            .sum(axis=2)
+        )
+    return M
+
+
+def _posting_intersections(a, b, n_a: int, n_b: int) -> np.ndarray:
+    """Intersection counts (n_a x n_b int32) of two blocks' postings by
+    run match: for every gram both blocks hold, cartesian-expand its
+    two posting runs in bounded chunks and ``bincount`` the cells."""
+    (ga, ra), (gb, rb) = a, b
+    ua, a_st, a_ct = np.unique(ga, return_index=True, return_counts=True)
+    ub, b_st, b_ct = np.unique(gb, return_index=True, return_counts=True)
+    _, ia, ib = np.intersect1d(ua, ub, assume_unique=True, return_indices=True)
+    a_st, a_ct, b_st, b_ct = a_st[ia], a_ct[ia], b_st[ib], b_ct[ib]
+    # int32 accumulator (counts are bounded by gram-set sizes);
+    # bincount's int64 chunk result is folded in with a same-kind
+    # in-place cast, halving the persistent per-task matrix
+    M = np.zeros(n_a * n_b, dtype=np.int32)
+    csum = np.cumsum(a_ct * b_ct)
+    chunk = 1 << 22
+    lo = 0
+    while lo < len(csum):
+        hi = int(np.searchsorted(csum, (csum[lo - 1] if lo else 0) + chunk)) + 1
+        hi = min(max(hi, lo + 1), len(csum))
+        act, bst, bct = a_ct[lo:hi], b_st[lo:hi], b_ct[lo:hi]
+        # A elems of these runs, each repeated its run's b-count
+        a_elems = _gather_ragged(ra, a_st[lo:hi], act)
+        A_idx = np.repeat(a_elems, np.repeat(bct, act))
+        # B slices per (run, a-elem): same order as A expansion
+        B_idx = _gather_ragged(rb, np.repeat(bst, act), np.repeat(bct, act))
+        M += np.bincount(A_idx * n_b + B_idx, minlength=n_a * n_b)
+        lo = hi
+    return M.reshape(n_a, n_b)
+
+
+def _blocked_cls_pairs(
+    cgrams: DataFrame,
+    m: _Measure,
+    *,
+    bitset: bool,
+    new_cls: DataFrame | None,
+    k: int | None,
+) -> DataFrame:
+    """Dense-vocabulary regimes: class pairs ``(ca, cb, i, sza, szb)``
+    with exact intersections, each block pair of
+    :func:`_block_pair_cogroup` one in-task intersection matrix (the
+    set analogue of :func:`embedding_near_dups`' block GEMM) — bitset
+    popcount or posting-run match.  Gram identity in-task is xxhash64
+    of the gram string (no global id assignment, no single-partition
+    window); a 64-bit collision between distinct grams of one corpus is
+    ~V^2 / 2^65 likely.
+
+    Only cells scoring >= ``t_lo`` leave the task.  A symmetric measure
+    emits each unordered pair once as ca < cb; an asymmetric one reads
+    both directions off the one matrix (rows: a in b, the transpose:
+    b in a).  ``k``: per contained class, only the cells within
+    ``tie_slack`` of its k-th best raw score are kept, so no candidate
+    that could tie at the k-th value after the final ROUND is dropped
+    before the exact JVM ranking — the emitted stream is
+    ~n_cls * n_blocks * k rows instead of the full census."""
+    cids = cgrams.select(
+        "cls", "sz", F.expr("transform(grams, g -> xxhash64(g))").alias("gids")
+    ).localCheckpoint(eager=True)
+    intersections = _bitset_intersections if bitset else _posting_intersections
+    delta = new_cls is not None
+    t_lo, slack = m.t_lo, m.tie_slack
+
+    def _emit(M, ids_r, ids_c, s_r, s_c):
+        score = m.score(M, s_r[:, None], s_c[None, :])
+        ok = (score >= t_lo) & (ids_r[:, None] != ids_c[None, :])
+        if k is not None and ok.any():
+            n_c = score.shape[1]
+            take = min(k, n_c)
+            kth = np.partition(np.where(ok, score, -1.0), n_c - take, axis=1)[
+                :, n_c - take
+            ]
+            ok &= score >= np.maximum(kth[:, None] - slack, t_lo)
+        rr, cc = np.nonzero(ok)
+        return ids_r[rr], ids_c[cc], M[rr, cc], s_r[rr], s_c[cc]
+
+    def _task(key, a_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(a_pdf) == 0 or len(b_pdf) == 0:
+            return pd.DataFrame(
+                {c: np.empty(0, np.int64) for c in ("ca", "cb", "i", "sza", "szb")}
+            )
+        ids_a, ids_b = a_pdf["cls"].to_numpy(), b_pdf["cls"].to_numpy()
+        sa = a_pdf["sz"].to_numpy().astype(np.int64)
+        sb = b_pdf["sz"].to_numpy().astype(np.int64)
+        M = intersections(_postings(a_pdf), _postings(b_pdf), len(sa), len(sb))
+        diag = not delta and key[0] == key[1]
+        outs = [_emit(M, ids_a, ids_b, sa, sb)]
+        if not (m.symmetric or diag):
+            outs.append(_emit(M.T, ids_b, ids_a, sb, sa))
+        ca, cb, ii, s1, s2 = (np.concatenate(c) for c in zip(*outs))
+        if m.symmetric:
+            # the diagonal holds every pair in both orders, any other
+            # block pair holds it once, in no particular order
+            if diag:
+                keep = ca < cb
+                ca, cb, ii, s1, s2 = ca[keep], cb[keep], ii[keep], s1[keep], s2[keep]
+            swap = ca > cb
+            ca, cb = np.where(swap, cb, ca), np.where(swap, ca, cb)
+            s1, s2 = np.where(swap, s2, s1), np.where(swap, s1, s2)
+        return pd.DataFrame(
+            {"ca": ca, "cb": cb, "i": ii.astype(np.int64), "sza": s1, "szb": s2}
+        )
+
+    pairs = _block_pair_cogroup(
+        cids,
+        "cls",
+        4096,  # classes per block: a 64 MB int32 intersection matrix
+        _task,
+        "ca bigint, cb bigint, i bigint, sza bigint, szb bigint",
+        new_ids=new_cls,
+    )
+    return pairs.dropDuplicates(["ca", "cb"]) if delta else pairs
+
+
+def _prefix_cls_pairs(
+    cs: tuple[DataFrame, ...], m: _Measure, new_cls: DataFrame | None
+) -> DataFrame:
+    """Sparse-vocabulary regime: class pairs ``(ca, cb, i, sza, szb)``
+    from AllPairs/SSJoin prefix-filtered candidates (Bayardo et al.
+    WWW'07, Chaudhuri et al. ICDE'06) with PPJoin size and positional
+    filters (Xiao et al. WWW'08), verified by row-local
+    ``array_intersect`` over the classes' sorted gram arrays — never an
+    exploded gram join + wide aggregate (a containment prefix at t=0.6
+    is ~40% of each class's grams, and that shape generates OOM-grade
+    aggregate input).
+
+    Every class orders its grams by ascending global df (rarest first,
+    ties by gram) and keeps the first sz - ceil(t_lo*sz) + 1.  A pair
+    qualifies only with overlap >= t_lo*|A| (A the contained side;
+    either side of a symmetric measure), so it shares a gram of A's
+    prefix — recall 1.0 — while hot grams land in suffixes and never
+    fan out.  A symmetric measure joins prefix to prefix (delta mode:
+    the new classes' prefixes to the full prefix index, still exact by
+    the symmetric prefix theorem); an asymmetric one joins the
+    contained side's prefix to the container's full index.  Size
+    filter: the needed overlap must fit in the smaller set.  Positional
+    filter: a shared gram at positions (pa, pb) bounds the overlap by
+    1 + min(|A|-pa, |B|-pb), and a qualifying pair's first shared gram
+    (in both prefixes) passes it."""
     from pyspark.sql import Window
 
+    _, _, cgrams, rtoks, dfreq = cs
     w = Window.partitionBy("cls").orderBy(F.asc("df"), F.asc("tok"))
-    prefix = (
+    # eager: the df-order window feeds both sides of the candidate join
+    posed = (
         rtoks.join(dfreq, "tok")
-        .join(reps.select("cls", "sz"), "cls")
         .withColumn("pos", F.row_number().over(w))
+        .localCheckpoint(eager=True)
+    )
+    prefix = posed.filter(
+        F.col("pos") <= F.col("sz") - F.ceil(F.col("sz") * m.t_lo) + 1
+    )
+    a = prefix if new_cls is None else prefix.join(new_cls, "cls")
+    b = prefix if m.symmetric else posed
+    sa, sb = F.col("sza"), F.col("szb")
+    need = m.min_overlap(sa, sb)
+    if m.symmetric and new_cls is None:
+        pair = F.col("ca") < F.col("cb")
+    else:
+        pair = F.col("ca") != F.col("cb")
+    cands = (
+        a.select(
+            F.col("cls").alias("ca"), F.col("sz").alias("sza"),
+            F.col("pos").alias("pa"), "tok",
+        )
+        .join(
+            b.select(
+                F.col("cls").alias("cb"), F.col("sz").alias("szb"),
+                F.col("pos").alias("pb"), "tok",
+            ),
+            "tok",
+        )
         .filter(
-            F.col("pos")
-            <= F.col("sz") - F.ceil(F.col("sz") * threshold - 1e-6) + 1
+            pair
+            & (need <= F.least(sa, sb))
+            & (1 + F.least(sa - F.col("pa"), sb - F.col("pb")) >= need)
         )
-        .select("cls", "tok", "sz", "pos")
     )
-    # delta mode: one side restricted to the new classes; a qualifying
-    # (new, old) or (new, new) pair still shares a token of BOTH
-    # prefixes (the symmetric prefix theorem), so joining the new-side
-    # prefix against the full prefix index keeps recall exactly 1.0
-    p1_src = prefix.join(new_cls, "cls") if new_cls is not None else prefix
-    p1 = p1_src.alias("p1")
-    p2 = prefix.alias("p2")
-    # positional filter (PPJoin, Xiao et al. WWW'08): a shared prefix
-    # token at positions (pa, pb) bounds the overlap by
-    # 1 + min(|x|-pa, |y|-pb); J >= t forces overlap >=
-    # t/(1+t) * (|x|+|y|), so pairs whose bound falls short are pruned
-    # at generation — exact (upper bound), with the same 1e-6 float
-    # slack direction as the prefix length (only ever keeps more).
-    overlap_need = (
-        (F.col("p1.sz") + F.col("p2.sz")) * (threshold / (1.0 + threshold))
-        - 1e-6
-    )
-    overlap_bound = 1 + F.least(
-        F.col("p1.sz") - F.col("p1.pos"), F.col("p2.sz") - F.col("p2.pos")
-    )
-    pair_cond = (
-        F.col("p1.cls") < F.col("p2.cls")
-        if new_cls is None
-        else F.col("p1.cls") != F.col("p2.cls")
-    )
-    cand = (
-        p1.join(
-            p2,
-            (F.col("p1.tok") == F.col("p2.tok"))
-            & pair_cond
-            # size filter: J >= t implies min >= t * max
-            & (
-                F.least("p1.sz", "p2.sz")
-                >= F.greatest("p1.sz", "p2.sz") * threshold - 1e-6
-            )
-            & (overlap_bound >= overlap_need),
+    if m.symmetric:
+        cands = cands.select(
+            F.least("ca", "cb").alias("ca"), F.greatest("ca", "cb").alias("cb")
         )
-        .select(
-            F.least(F.col("p1.cls"), F.col("p2.cls")).alias("ca"),
-            F.greatest(F.col("p1.cls"), F.col("p2.cls")).alias("cb"),
-        )
-        .distinct()
+    else:
+        cands = cands.select("ca", "cb")
+    cands = cands.distinct().localCheckpoint(eager=True)
+    ga = cgrams.select(
+        F.col("cls").alias("ca"), F.col("sz").alias("sza"), F.col("grams").alias("ga")
     )
-
-    # --- exact Jaccard on candidate class pairs -------------------------
-    t1 = rtoks.select(F.col("cls").alias("ca"), "tok")
-    t2 = rtoks.select(F.col("cls").alias("cb"), "tok")
-    inter = (
-        cand.join(t1, "ca")
-        .join(t2, ["cb", "tok"])
-        .groupBy("ca", "cb")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    gb = cgrams.select(
+        F.col("cls").alias("cb"), F.col("sz").alias("szb"), F.col("grams").alias("gb")
     )
-    s1 = reps.select(F.col("cls").alias("ca"), F.col("sz").alias("sza"))
-    s2 = reps.select(F.col("cls").alias("cb"), F.col("sz").alias("szb"))
     return (
-        inter.join(s1, "ca")
-        .join(s2, "cb")
+        cands.join(ga, "ca")
+        .join(gb, "cb")
         .select(
-            "ca",
-            "cb",
-            F.round(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6
-            ).alias("jaccard"),
+            "ca", "cb", F.size(F.array_intersect("ga", "gb")).alias("i"), "sza", "szb"
         )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
-def _ngram_jaccard_class_pairs(
-    docs: DataFrame,
-    *,
-    n: int,
-    threshold: float,
-    text_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Class-level core of :func:`ngram_jaccard_pairs`: collapse
-    exact-duplicate token sets into classes, then exact Jaccard over
-    class representatives only (bitset or prefix regime — see
-    :func:`_jaccard_cls_pairs`).
+def _expand(
+    cls_pairs: DataFrame, classes: DataFrame, m: _Measure, k: int | None = None
+) -> DataFrame:
+    """Class pairs -> doc pairs ``(doc_a, doc_b, <m.col>)``: cross-class
+    pairs join both classes' members, same-class pairs score exactly
+    1.0.  A symmetric measure emits doc_a < doc_b, an asymmetric one
+    every ordered pair.
 
-    Returns ``(classes, cls_pairs)``: per-doc class membership
-    ``(doc_id, cls, sz)`` and qualifying distinct-class pairs
-    ``(ca, cb, jaccard)`` with ``ca < cb`` — everything BEFORE the
-    quadratic member-pair expansion, so consumers that only need
-    connectivity (:func:`dedup_keep_list`) can stay linear in corpus
-    size while :func:`ngram_jaccard_pairs` keeps its all-pairs output
-    contract."""
-    classes, reps, rtoks, dfreq = _class_structures(docs, n=n, text_col=text_col)
-    return classes, _jaccard_cls_pairs(reps, rtoks, dfreq, threshold)
+    ``k`` (asymmetric top-k): only a container class's k smallest
+    members — k+1 for a doc's own class-mates, one of which is the doc
+    itself — are expanded: every member of a class scores the same, so
+    no larger member can place in a per-doc top-k ranked by
+    (score DESC, doc_b ASC)."""
+    from pyspark.sql import Window
+
+    mem = classes.select("cls", "doc_id")
+    mem_b = cross_b = mem
+    if k is not None:
+        mem_b = mem.withColumn(
+            "_mrn", F.row_number().over(Window.partitionBy("cls").orderBy("doc_id"))
+        ).filter(F.col("_mrn") <= k + 1)
+        cross_b = mem_b.filter(F.col("_mrn") <= k)
+    cross = cls_pairs.join(
+        mem.select(F.col("cls").alias("ca"), F.col("doc_id").alias("da")), "ca"
+    ).join(cross_b.select(F.col("cls").alias("cb"), F.col("doc_id").alias("db")), "cb")
+    if m.symmetric:
+        da, db = F.least("da", "db"), F.greatest("da", "db")
+    else:
+        da, db = F.col("da"), F.col("db")
+    intra = (
+        mem.select("cls", F.col("doc_id").alias("doc_a"))
+        .join(mem_b.select("cls", F.col("doc_id").alias("doc_b")), "cls")
+        .filter(
+            F.col("doc_a") < F.col("doc_b")
+            if m.symmetric
+            else F.col("doc_a") != F.col("doc_b")
+        )
+        .select("doc_a", "doc_b", F.lit(1.0).alias(m.col))
+    )
+    return cross.select(da.alias("doc_a"), db.alias("doc_b"), m.col).unionByName(
+        intra
+    )
 
 
 # ----------------------------------------------------------- MinHash + LSH
@@ -760,6 +896,42 @@ def simhash_near_dups(
 # ------------------------------------------------------ dedup keep-list
 
 
+def _keep_graph(
+    classes: DataFrame, reps: DataFrame, cls_pairs: DataFrame
+) -> DataFrame:
+    """(src, dst) edges of the compact connectivity-equivalent dup
+    graph: a star from each exact-dup class's min member to its other
+    members plus ONE rep-rep edge per qualifying class pair.  Its
+    components (and hence keep_id = component min) are those of the
+    expanded member-pair clique graph, with O(docs + class pairs) edges
+    instead of O(sum class_size^2)."""
+    star = (
+        classes.join(reps, "cls")
+        .filter(F.col("doc_id") != F.col("rep"))
+        .select(F.col("rep").alias("src"), F.col("doc_id").alias("dst"))
+    )
+    cross = (
+        cls_pairs.join(
+            reps.select(F.col("cls").alias("ca"), F.col("rep").alias("src")), "ca"
+        )
+        .join(reps.select(F.col("cls").alias("cb"), F.col("rep").alias("dst")), "cb")
+        .select("src", "dst")
+    )
+    return star.unionByName(cross)
+
+
+def _keep_ids(docs: DataFrame, comp: DataFrame) -> DataFrame:
+    """(doc_id, keep_id): the doc's component min, or itself when the
+    doc is in no pair."""
+    return (
+        docs.select("doc_id")
+        .join(comp, docs.doc_id == comp.id, "left")
+        .select(
+            "doc_id", F.coalesce("component", F.col("doc_id")).alias("keep_id")
+        )
+    )
+
+
 def dedup_keep_list(
     docs: DataFrame,
     *,
@@ -784,17 +956,12 @@ def dedup_keep_list(
     budget).
 
     The convergence path never materializes the quadratic all-pairs
-    dup graph: CC only needs connectivity, so it runs over the compact
-    connectivity-equivalent graph — a star from each exact-dup class
-    member to its class-min plus ONE rep-rep edge per qualifying class
-    pair.  Components (and hence keep_id = component min) are identical
-    to CC over the expanded member-pair clique graph, but the edge
-    count is O(docs + class pairs) instead of O(sum class_size^2) —
-    the expanded graph at sf1 is 93.5M edges for 50k docs and OOMs the
-    no-op gate budget long before 100x.  The fixed-iters parity mode
-    keeps the expanded graph: hash-min flooding depth depends on the
-    graph SHAPE, and the oracle unrolls its rounds over the expanded
-    pair graph.
+    dup graph: CC only needs connectivity, so it runs over
+    :func:`_keep_graph` — the expanded graph at sf1 is 93.5M edges for
+    50k docs and OOMs the no-op gate budget long before 100x.  The
+    fixed-iters parity mode keeps the expanded graph: hash-min flooding
+    depth depends on the graph SHAPE, and the oracle unrolls its rounds
+    over the expanded pair graph.
     """
     spark = docs.sparkSession
     from graphjet_spark.plans.components import (
@@ -803,39 +970,15 @@ def dedup_keep_list(
     )
 
     if cc_fixed_iters is None:
-        classes, cls_pairs = _ngram_jaccard_class_pairs(
-            docs, n=n, threshold=threshold, text_col=text_col
-        )
-        roots = classes.groupBy("cls").agg(F.min("doc_id").alias("root"))
-        star = (
-            classes.join(roots, "cls")
-            .filter(F.col("doc_id") != F.col("root"))
-            .select(F.col("root").alias("src"), F.col("doc_id").alias("dst"))
-        )
-        cross = (
-            cls_pairs.join(
-                roots.select(F.col("cls").alias("ca"), F.col("root").alias("src")),
-                "ca",
-            )
-            .join(
-                roots.select(F.col("cls").alias("cb"), F.col("root").alias("dst")),
-                "cb",
-            )
-            .select("src", "dst")
-        )
-        comp = connected_components_star(spark, star.unionByName(cross))
+        cs = _class_structures(docs, n=n, text_col=text_col)
+        cls_pairs = _class_pairs(cs, _Measure("jaccard", threshold))
+        comp = connected_components_star(spark, _keep_graph(*cs[:2], cls_pairs))
     else:
         pairs = ngram_jaccard_pairs(
             docs, n=n, threshold=threshold, text_col=text_col
         ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         comp = connected_components(spark, pairs, fixed_iters=cc_fixed_iters)
-    return (
-        docs.select("doc_id")
-        .join(comp, docs.doc_id == comp.id, "left")
-        .select(
-            "doc_id", F.coalesce("component", F.col("doc_id")).alias("keep_id")
-        )
-    )
+    return _keep_ids(docs, comp)
 
 
 def dedup_keep_list_delta(
@@ -860,12 +1003,11 @@ def dedup_keep_list_delta(
     closure exactly; membership stars over the UNION classes cover
     same-token-set pairs (a new exact dup joins its class by hash
     equality, whatever batch it arrived in); delta class pairs
-    (:func:`_jaccard_cls_pairs` with ``new_cls``) cover every
-    cross-class pair with a new side — recall 1.0 in both regimes
-    (bitset: new x all blocks; prefix: symmetric prefix theorem).
-    keep_id = component min is unchanged, so the output is
-    row-identical to a full recompute (the gate oracles it against the
-    batch SQL twin).
+    (:func:`_class_pairs` with ``new_cls``) cover every cross-class
+    pair with a new side — recall 1.0 in every regime (blocked: new x
+    all blocks; prefix: symmetric prefix theorem).  keep_id =
+    component min is unchanged, so the output is row-identical to a
+    full recompute (the gate oracles it against the batch SQL twin).
 
     Linear passes (tokenize/class-collapse) are recomputed over the
     union here; a production deployment persists the class and gram
@@ -876,42 +1018,21 @@ def dedup_keep_list_delta(
     spark = docs.sparkSession
     from graphjet_spark.plans.components import connected_components_star
 
-    classes, reps, rtoks, dfreq = _class_structures(docs, n=n, text_col=text_col)
+    cs = _class_structures(docs, n=n, text_col=text_col)
+    classes, reps = cs[:2]
     new_cls = (
         classes.join(new_ids.select("doc_id"), "doc_id")
         .select("cls")
         .distinct()
     )
-    cls_pairs = _jaccard_cls_pairs(reps, rtoks, dfreq, threshold, new_cls=new_cls)
-
-    roots = classes.groupBy("cls").agg(F.min("doc_id").alias("root"))
-    star = (
-        classes.join(roots, "cls")
-        .filter(F.col("doc_id") != F.col("root"))
-        .select(F.col("root").alias("src"), F.col("doc_id").alias("dst"))
-    )
-    cross = (
-        cls_pairs.join(
-            roots.select(F.col("cls").alias("ca"), F.col("root").alias("src")), "ca"
-        )
-        .join(
-            roots.select(F.col("cls").alias("cb"), F.col("root").alias("dst")), "cb"
-        )
-        .select("src", "dst")
-    )
+    cls_pairs = _class_pairs(cs, _Measure("jaccard", threshold), new_cls=new_cls)
     old_edges = old_keeps.filter(F.col("doc_id") != F.col("keep_id")).select(
         F.col("keep_id").alias("src"), F.col("doc_id").alias("dst")
     )
     comp = connected_components_star(
-        spark, star.unionByName(cross).unionByName(old_edges)
+        spark, _keep_graph(classes, reps, cls_pairs).unionByName(old_edges)
     )
-    return (
-        docs.select("doc_id")
-        .join(comp, docs.doc_id == comp.id, "left")
-        .select(
-            "doc_id", F.coalesce("component", F.col("doc_id")).alias("keep_id")
-        )
-    )
+    return _keep_ids(docs, comp)
 
 
 # ------------------------------------------------------- embedding cosine
@@ -946,22 +1067,9 @@ def embedding_near_dups(
        values are byte-identical to a naive all-pairs evaluation and
        reproducible against any float64 oracle.
     """
-    n = embeddings.count()
-    n_blocks = max(1, -(-n // block_rows))
     v = embeddings.select(
         F.col(id_col).alias("id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
-    )
-    # replicate: a-side covers block pairs (blk, j >= blk), b-side (i <= blk)
-    a_rep = v.select(
-        "id", "v", F.col("blk").alias("bi"),
-        F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("bj"),
-    )
-    b_rep = v.select(
-        "id", "v",
-        F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
-        F.col("blk").alias("bj"),
     )
     margin = 1e-6
 
@@ -989,10 +1097,8 @@ def embedding_near_dups(
             {"id_a": np.minimum(id_a, id_b), "id_b": np.maximum(id_a, id_b)}
         )
 
-    cand = (
-        a_rep.groupby("bi", "bj")
-        .cogroup(b_rep.groupby("bi", "bj"))
-        .applyInPandas(_gemm, schema="id_a bigint, id_b bigint")
+    cand = _block_pair_cogroup(
+        v, "id", block_rows, _gemm, "id_a bigint, id_b bigint"
     )
 
     # exact float64 rescore with sequential JVM summation
@@ -1441,208 +1547,6 @@ def gram_novelty(
     )
 
 
-# Vocabulary bound for the blocked-intersection containment path: with
-# V distinct grams at most this, gram df is high enough that prefix
-# filtering degenerates toward all-pairs (measured: the sf10 dense-vocab
-# census spilled 127.5M+ candidates past a 78 GB disk), while per-class
-# posting arrays stay small enough that every block pair is one
-# in-task numpy intersection with NO materialized candidate relation.
-# Above it, real-web sparse vocabularies make the AllPairs/PPJoin
-# prefix filter actually prune, and the inverted-index path wins.
-_CONTAIN_BLOCK_VOCAB_MAX = 1 << 17
-
-
-def _gather_ragged(
-    vals: np.ndarray, starts: np.ndarray, counts: np.ndarray
-) -> np.ndarray:
-    """Concatenate vals[starts[r] : starts[r]+counts[r]] over all r
-    without a Python loop (exclusive-cumsum index arithmetic)."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, dtype=vals.dtype)
-    excl = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    idx = np.arange(total, dtype=np.int64) + np.repeat(starts - excl, counts)
-    return vals[idx]
-
-
-def _containment_cls_pairs_blocked(
-    cids: DataFrame,
-    reps: DataFrame,
-    threshold: float,
-    *,
-    k: int | None = None,
-    block_rows: int = 4096,
-    round_to: int = 6,
-) -> DataFrame:
-    """Ordered qualifying class pairs ``(ca, cb, containment)`` —
-    ``ca`` contained in ``cb`` with round(|A n B| / |A|) >= threshold —
-    for the dense-vocabulary regime where prefix filtering is powerless
-    (every gram's df is a large fraction of all classes, so the
-    candidate join degenerates to ~all-pairs and its materialization is
-    the scale killer, not the arithmetic).
-
-    Classes are hashed into ceil(n_cls / block_rows) blocks; every
-    unordered block pair is ONE cogrouped-Arrow task that computes
-    exact intersection counts with a vectorized inverted-index run
-    match (sort both sides' gram postings, cartesian-expand matching
-    gram runs in bounded chunks, ``bincount`` into a dense
-    nA x nB int32 matrix) — the set analogue of
-    :func:`embedding_near_dups`' blocked GEMM.  NO candidate relation
-    is ever shuffled or spilled; per-task memory is bounded by
-    block_rows^2 cells + the two blocks' postings.  Both containment
-    directions are read off the one matrix (rows/sza and cols/szb).
-
-    ``k``: per-CONTAINED-class in-task top-k retention (containment
-    descending, with a 10^-round_to slack so candidates tied at the
-    k-th value after the final round_to-decimal ROUND are never dropped
-    before the exact JVM ranking) — the bounded-output regime that keeps the
-    emitted stream ~n_cls * n_blocks * k instead of the full census.
-    With ``k=None`` every qualifying pair is emitted (exact census,
-    same values as the prefix path — intersections are exact ints and
-    the threshold is re-applied JVM-side on ROUND'ed doubles).
-
-    Gram identity in-task is xxhash64 of the gram string (no global id
-    assignment, no single-partition window); a 64-bit collision between
-    distinct grams of one corpus is ~V^2 / 2^65 and would only ever
-    INFLATE one intersection count by 1."""
-    cids = cids.localCheckpoint(eager=True)
-    n_cls = cids.count()
-    n_blocks = max(1, -(-n_cls // block_rows))
-    blocked = cids.withColumn(
-        "blk", F.pmod(F.xxhash64(F.col("cls").cast("string")), F.lit(n_blocks)).cast("int")
-    )
-    a_rep = blocked.select(
-        "cls", "sz", "gids", F.col("blk").alias("bi"),
-        F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("bj"),
-    )
-    b_rep = blocked.select(
-        "cls", "sz", "gids",
-        F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
-        F.col("blk").alias("bj"),
-    )
-    # Both epsilons are DERIVED from round_to (r4 advisory: hardcoded
-    # 1e-6 values were calibrated to round_to=6 and silently dropped
-    # qualifying pairs at coarser rounding).  The final JVM filter is
-    # round(i/sza, round_to) >= threshold, so a raw value as low as
-    # threshold - 0.5*10^-round_to can still qualify; the in-task
-    # prefilter must keep at least that (plus a float guard).
-    t_eps = threshold - (0.5 * 10.0 ** -round_to + 1e-9)
-    # Top-k tie slack: two raw values rounding to the same round_to
-    # decimals differ by < 10^-round_to, so retaining everything within
-    # that of the k-th unrounded value covers every post-ROUND tie.
-    k_slack = 10.0 ** -round_to + 1e-9
-    kk = k
-
-    def _postings(pdf: pd.DataFrame):
-        counts = np.fromiter(
-            (len(x) for x in pdf["gids"]), dtype=np.int64, count=len(pdf)
-        )
-        if counts.sum() == 0:
-            return (
-                np.empty(0, np.int64),
-                np.empty(0, np.int64),
-            )
-        grams = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in pdf["gids"]]
-        )
-        rows = np.repeat(np.arange(len(pdf), dtype=np.int64), counts)
-        order = np.argsort(grams, kind="stable")
-        return grams[order], rows[order]
-
-    def _task(key, a_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "ca": np.empty(0, np.int64),
-                "cb": np.empty(0, np.int64),
-                "i": np.empty(0, np.int64),
-            }
-        )
-        if len(a_pdf) == 0 or len(b_pdf) == 0:
-            return empty
-        ids_a = a_pdf["cls"].to_numpy()
-        ids_b = b_pdf["cls"].to_numpy()
-        sa = a_pdf["sz"].to_numpy().astype(np.int64)
-        sb = b_pdf["sz"].to_numpy().astype(np.int64)
-        nA, nB = len(a_pdf), len(b_pdf)
-        ga, ra = _postings(a_pdf)
-        gb, rb = _postings(b_pdf)
-        if len(ga) == 0 or len(gb) == 0:
-            return empty
-        ua, a_st, a_ct = np.unique(ga, return_index=True, return_counts=True)
-        ub, b_st, b_ct = np.unique(gb, return_index=True, return_counts=True)
-        common, ia, ib = np.intersect1d(
-            ua, ub, assume_unique=True, return_indices=True
-        )
-        if len(common) == 0:
-            return empty
-        a_st, a_ct = a_st[ia], a_ct[ia]
-        b_st, b_ct = b_st[ib], b_ct[ib]
-        # int32 accumulator (counts are bounded by gram-set sizes);
-        # bincount's int64 chunk result is folded in with a same-kind
-        # in-place cast, halving the persistent per-task matrix
-        M = np.zeros(nA * nB, dtype=np.int32)
-        pair_cnt = a_ct * b_ct
-        csum = np.cumsum(pair_cnt)
-        chunk = 1 << 22
-        lo = 0
-        while lo < len(common):
-            hi = int(np.searchsorted(csum, (csum[lo - 1] if lo else 0) + chunk)) + 1
-            hi = min(max(hi, lo + 1), len(common))
-            act, bst, bct = a_ct[lo:hi], b_st[lo:hi], b_ct[lo:hi]
-            # A elems of these runs, each repeated its run's b-count
-            a_elems = _gather_ragged(ra, a_st[lo:hi], act)
-            A_idx = np.repeat(a_elems, np.repeat(bct, act))
-            # B slices per (run, a-elem): same order as A expansion
-            B_idx = _gather_ragged(rb, np.repeat(bst, act), np.repeat(bct, act))
-            M += np.bincount(A_idx * nB + B_idx, minlength=nA * nB)
-            lo = hi
-        M = M.reshape(nA, nB)
-        diag = key[0] == key[1]
-
-        def _emit(Mm, ids_r, ids_c, s_r):
-            cont = Mm / s_r[:, None]
-            ok = (cont >= t_eps) & (ids_r[:, None] != ids_c[None, :])
-            if kk is not None and ok.any():
-                contm = np.where(ok, cont, -1.0)
-                take = min(kk, contm.shape[1])
-                kth = np.partition(contm, contm.shape[1] - take, axis=1)[
-                    :, contm.shape[1] - take
-                ]
-                ok &= cont >= np.maximum(kth[:, None] - k_slack, t_eps)
-            rr, cc = np.nonzero(ok)
-            return ids_r[rr], ids_c[cc], Mm[rr, cc]
-        outs = [_emit(M, ids_a, ids_b, sa)]
-        if not diag:
-            # the transpose is the other containment direction; on the
-            # diagonal block A==B so M already holds every ordered pair
-            outs.append(_emit(M.T, ids_b, ids_a, sb))
-        ca = np.concatenate([o[0] for o in outs])
-        cb = np.concatenate([o[1] for o in outs])
-        ii = np.concatenate([o[2] for o in outs])
-        return pd.DataFrame(
-            {"ca": ca, "cb": cb, "i": ii.astype(np.int64)}
-        )
-
-    pairs = (
-        a_rep.groupby("bi", "bj")
-        .cogroup(b_rep.groupby("bi", "bj"))
-        .applyInPandas(_task, schema="ca bigint, cb bigint, i bigint")
-    )
-    s1 = reps.select(F.col("cls").alias("ca"), F.col("sz").alias("sza"))
-    return (
-        pairs.join(s1, "ca")
-        .select(
-            "ca",
-            "cb",
-            F.round(
-                F.col("i").cast("double") / F.col("sza").cast("double"),
-                round_to,
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
-
-
 def containment_pairs(
     docs: DataFrame,
     *,
@@ -1657,202 +1561,26 @@ def containment_pairs(
     fully embedded in a long one has tiny Jaccard (union is the long
     doc) but containment 1.0.  Standard corpus-dedup companion to the
     symmetric ngram_jaccard_pairs (RefinedWeb/Dolma-style sub-document
-    leak audits).
+    leak audits).  Values are rounded to ``round_to`` decimals before
+    the threshold applies.
 
-    Candidate generation is prefix-filtered on the CONTAINED side only
-    (the side the threshold bounds): order each doc's grams by
-    ascending global document frequency (rarest first, ties by gram),
-    keep the first sz - ceil(t*sz) + 1.  If C(a in b) >= t then
-    |A n B| >= ceil(t*|A|), so b must share one of a's prefix grams —
-    recall is exactly 1.0 (the ceil carries a 1e-6 slack so prefixes
-    only ever err longer).  Hot (boilerplate-grade) grams land in
-    suffixes and never fan out, which is the whole scale control: the
-    candidate join is prefix x inverted-index, never doc x doc.
-    Exact intersections are then counted on candidates only.
-
-    Like :func:`ngram_jaccard_pairs`, exact-duplicate token SETS are
-    collapsed into classes first — near-dup corpora are dominated by
-    exact-dup clusters, and every member of a class has identical
-    containment against everything else, so the candidate join and the
-    intersection count run once per (contained-class, container-class)
-    ordered pair and expand back to member doc pairs by joins.  Without
-    the collapse the intersection fan-out is quadratic in class size
-    (measured: AGGREGATE_OUT_OF_MEMORY at sf1, where dup classes hold
-    hundreds of docs).  Candidates are pruned by a size filter
-    (|B| >= t*|A|, since the overlap can't exceed |B|) and a
-    containment-adapted PPJoin positional filter: with BOTH sides'
-    grams in the same global (df, tok) order, a shared gram at
-    positions (pa, pb) bounds the overlap by 1 + min(|A|-pa, |B|-pb),
-    which must reach ceil(t*|A|).  Intra-class ordered pairs are
-    emitted directly with containment exactly 1.0.
-
-    Verification is a row-local JVM ``array_intersect`` over the two
-    classes' sorted gram arrays — never an exploded gram join + wide
-    aggregate (a containment prefix at t=0.6 is ~40% of each doc's
-    grams vs ~10% for Jaccard at t=0.9, so the exploded-intersection
-    shape that works there generates OOM-grade aggregate input here).
+    Runs on the same set-similarity join core as
+    :func:`ngram_jaccard_pairs`: exact-duplicate token SETS collapse
+    into classes (:func:`_class_structures`), so the intersection work
+    runs once per (contained-class, container-class) ordered pair;
+    :func:`_class_pairs` picks the regime from the vocabulary size —
+    blocked bitset popcount (V <= 256), blocked posting-run
+    intersection (V <= 2^17: dense vocabularies where prefix filtering
+    can't prune, with NO candidate relation materialized), else
+    prefix-filtered candidates on the contained side (recall exactly
+    1.0 by the SSJoin prefix theorem) with size and PPJoin positional
+    filters, verified by row-local ``array_intersect``.  Class pairs
+    expand back to ordered member doc pairs; intra-class ordered pairs
+    score exactly 1.0.
     """
-    classes, reps, cgrams, rtoks, dfreq = _containment_structures(
-        docs, n=n, text_col=text_col
-    )
-    vocab = dfreq.count()
-    if 0 < vocab <= _CONTAIN_BLOCK_VOCAB_MAX:
-        cids = cgrams.select(
-            "cls", "sz",
-            F.expr("transform(grams, g -> xxhash64(g))").alias("gids"),
-        )
-        cls_pairs = _containment_cls_pairs_blocked(
-            cids, reps, threshold, round_to=round_to
-        )
-    else:
-        cls_pairs = _containment_cls_pairs_prefix(
-            cgrams, reps, rtoks, dfreq, threshold, round_to=round_to
-        )
-    return _containment_expand_census(cls_pairs, classes)
-
-
-def _containment_structures(
-    docs: DataFrame, *, n: int, text_col: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Exact-dup class collapse for the containment family:
-    (classes, reps, cgrams, rtoks, dfreq).  Grams carried as the sorted
-    array: the class key hashes it AND the sparse-path verifier
-    intersects it row-locally."""
-    toks = token_sets(docs, text_col, n).localCheckpoint(eager=True)
-    classes = (
-        toks.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("tok")).alias("grams"))
-        .select(
-            "doc_id",
-            F.xxhash64(F.concat_ws("\x1f", "grams")).alias("cls"),
-            F.size("grams").alias("sz"),
-            "grams",
-        )
-        .localCheckpoint(eager=True)
-    )
-    reps = classes.groupBy("cls").agg(
-        F.min("doc_id").alias("rep"), F.first("sz").alias("sz")
-    )
-    cgrams = (
-        classes.join(reps.select(F.col("rep").alias("doc_id"), "cls"), ["cls", "doc_id"])
-        .select("cls", "sz", "grams")
-        .localCheckpoint(eager=True)
-    )
-    rtoks = cgrams.select("cls", F.explode("grams").alias("tok"))
-    dfreq = rtoks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    return classes, reps, cgrams, rtoks, dfreq
-
-
-def _containment_cls_pairs_prefix(
-    cgrams: DataFrame,
-    reps: DataFrame,
-    rtoks: DataFrame,
-    dfreq: DataFrame,
-    threshold: float,
-    *,
-    round_to: int = 6,
-) -> DataFrame:
-    """Sparse-vocabulary census path: AllPairs/SSJoin prefix-filtered
-    candidates (recall exactly 1.0 on the contained side) + row-local
-    ``array_intersect`` verification over the classes' sorted gram
-    arrays.  See :func:`containment_pairs` for the full argument."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("cls").orderBy(F.asc("df"), F.asc("tok"))
-    need = F.ceil(F.lit(float(threshold)) * F.col("sz") - F.lit(1e-6))
-    # eager checkpoint, same rationale as ngram_jaccard_pairs above:
-    # leaving posed lazy folds the df-order window and the inverted-index
-    # join into one giant downstream plan
-    posed = (
-        rtoks.join(dfreq, "tok")
-        .join(reps.select("cls", "sz"), "cls")
-        .withColumn("pos", F.row_number().over(w))
-        .localCheckpoint(eager=True)
-    )
-    prefix = posed.filter(F.col("pos") <= F.col("sz") - need + 1).select(
-        F.col("cls").alias("ca"),
-        F.col("sz").alias("sza"),
-        F.col("pos").alias("pa"),
-        "tok",
-    )
-    index_b = posed.select(
-        F.col("cls").alias("cb"),
-        F.col("sz").alias("szb"),
-        F.col("pos").alias("pb"),
-        "tok",
-    )
-    need_a = F.ceil(F.lit(float(threshold)) * F.col("sza") - F.lit(1e-6))
-    cands = (
-        prefix.join(index_b, "tok")
-        .filter(
-            (F.col("ca") != F.col("cb"))
-            # overlap <= |B|, so C(a in b) >= t forces |B| >= t*|A|
-            & (F.col("szb") >= F.lit(float(threshold)) * F.col("sza") - 1e-6)
-            # positional: overlap <= 1 + min(|A|-pa, |B|-pb) must reach
-            # ceil(t*|A|) for SOME shared gram; any candidate pair's
-            # rarest shared prefix gram gives the tightest such bound,
-            # and a pair qualifying on overlap always has a generating
-            # (pa, pb) satisfying it (the PPJoin argument, one-sided)
-            & (
-                1 + F.least(F.col("sza") - F.col("pa"), F.col("szb") - F.col("pb"))
-                >= need_a
-            )
-        )
-        .select("ca", "cb")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # --- row-local exact verification over sorted gram arrays -----------
-    ga = cgrams.select(
-        F.col("cls").alias("ca"), F.col("sz").alias("sza"), F.col("grams").alias("ga")
-    )
-    gb = cgrams.select(F.col("cls").alias("cb"), F.col("grams").alias("gb"))
-    contain = F.round(
-        F.size(F.array_intersect("ga", "gb")).cast("double")
-        / F.col("sza").cast("double"),
-        round_to,
-    )
-    return (
-        cands.join(ga, "ca")
-        .join(gb, "cb")
-        .select("ca", "cb", contain.alias("containment"))
-        .filter(F.col("containment") >= threshold)
-    )
-
-
-def _containment_expand_census(
-    cls_pairs: DataFrame, classes: DataFrame
-) -> DataFrame:
-    """Expand qualifying ordered class pairs back to ordered doc pairs
-    (full census): cross-class pairs by member joins, intra-class
-    ordered pairs at containment exactly 1.0."""
-    m = classes.select("doc_id", "cls")
-    cross_docs = (
-        cls_pairs.join(
-            m.select(F.col("cls").alias("ca"), F.col("doc_id").alias("doc_a")),
-            "ca",
-        )
-        .join(
-            m.select(F.col("cls").alias("cb"), F.col("doc_id").alias("doc_b")),
-            "cb",
-        )
-        .select("doc_a", "doc_b", "containment")
-    )
-    m1 = m.alias("m1")
-    m2 = m.alias("m2")
-    intra_docs = (
-        m1.join(
-            m2,
-            (F.col("m1.cls") == F.col("m2.cls"))
-            & (F.col("m1.doc_id") != F.col("m2.doc_id")),
-        )
-        .select(
-            F.col("m1.doc_id").alias("doc_a"),
-            F.col("m2.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("containment"),
-        )
-    )
-    return cross_docs.unionByName(intra_docs)
+    m = _Measure("containment", threshold, round_to)
+    cs = _class_structures(docs, n=n, text_col=text_col)
+    return _expand(_class_pairs(cs, m), cs[0], m)
 
 
 def containment_topk(
@@ -1875,16 +1603,17 @@ def containment_topk(
 
     Boundedness, stage by stage:
 
-    1. Class pairs come from :func:`_containment_cls_pairs_blocked`
-       with in-task per-contained top-k retention — the emitted stream
-       is ~n_cls * n_blocks * k rows, never the quadratic census.
-       (Sparse-vocab corpora take the prefix-filtered census path,
-       which prunes by assumption there.)
+    1. Class pairs come from :func:`_class_pairs` with in-task
+       per-contained top-k retention in the blocked regimes — the
+       emitted stream is ~n_cls * n_blocks * k rows, never the
+       quadratic census.  (Sparse-vocab corpora take the
+       prefix-filtered census, which prunes by assumption there.)
     2. Per contained class, the top-k container CLASSES by (containment
        DESC, rep ASC) — rep = the class's minimum member doc_id.
-    3. Expansion emits only each selected class's k smallest members
-       (cross) and each doc's k+1 smallest class-mates (intra, all at
-       containment exactly 1.0), then one final per-doc window takes k.
+    3. Expansion (:func:`_expand` with ``k``) emits only each selected
+       class's k smallest members (cross) and each doc's k+1 smallest
+       class-mates (intra, all at containment exactly 1.0), then one
+       final per-doc window takes k.
 
     Exactness of the class-level cut (stage 2+3 vs the doc-level
     definition): docs of one class share one containment value, and a
@@ -1902,22 +1631,10 @@ def containment_topk(
     row_number() — no engine trick leaks into the semantics."""
     from pyspark.sql import Window
 
-    classes, reps, cgrams, rtoks, dfreq = _containment_structures(
-        docs, n=n, text_col=text_col
-    )
-    vocab = dfreq.count()
-    if 0 < vocab <= _CONTAIN_BLOCK_VOCAB_MAX:
-        cids = cgrams.select(
-            "cls", "sz",
-            F.expr("transform(grams, g -> xxhash64(g))").alias("gids"),
-        )
-        cls_pairs = _containment_cls_pairs_blocked(
-            cids, reps, threshold, k=k, round_to=round_to
-        )
-    else:
-        cls_pairs = _containment_cls_pairs_prefix(
-            cgrams, reps, rtoks, dfreq, threshold, round_to=round_to
-        )
+    m = _Measure("containment", threshold, round_to)
+    cs = _class_structures(docs, n=n, text_col=text_col)
+    classes, reps = cs[:2]
+    cls_pairs = _class_pairs(cs, m, k=k)
     # stage 2: top-k container classes per contained class
     repb = reps.select(F.col("cls").alias("cb"), F.col("rep").alias("rep_b"))
     w1 = Window.partitionBy("ca").orderBy(
@@ -1930,37 +1647,11 @@ def containment_topk(
         .select("ca", "cb", "containment")
     )
     # stage 3: k-sliced member expansion + final per-doc window
-    wm = Window.partitionBy("cls").orderBy("doc_id")
-    memk = (
-        classes.select("cls", "doc_id")
-        .withColumn("_mrn", F.row_number().over(wm))
-        .filter(F.col("_mrn") <= k + 1)
-    )
-    m = classes.select("doc_id", "cls")
-    cross = (
-        top_cls.join(
-            m.select(F.col("cls").alias("ca"), F.col("doc_id").alias("doc_a")),
-            "ca",
-        )
-        .join(
-            memk.filter(F.col("_mrn") <= k).select(
-                F.col("cls").alias("cb"), F.col("doc_id").alias("doc_b")
-            ),
-            "cb",
-        )
-        .select("doc_a", "doc_b", "containment")
-    )
-    intra = (
-        m.select("cls", F.col("doc_id").alias("doc_a"))
-        .join(memk.select("cls", F.col("doc_id").alias("doc_b")), "cls")
-        .filter(F.col("doc_b") != F.col("doc_a"))
-        .select("doc_a", "doc_b", F.lit(1.0).alias("containment"))
-    )
     w2 = Window.partitionBy("doc_a").orderBy(
         F.desc("containment"), F.asc("doc_b")
     )
     return (
-        cross.unionByName(intra)
+        _expand(top_cls, classes, m, k=k)
         .withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
         .select("doc_a", "doc_b", "containment", "rank")

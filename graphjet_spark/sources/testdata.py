@@ -26,6 +26,8 @@ Two canonical graphs:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -40,6 +42,22 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+
+def duck_memory_limit() -> str:
+    """DuckDB ``memory_limit`` for the oracle side of the gate tools
+    (check_correctness, probe_oracles, mirror_check): ``$GATE_DUCK_MEM``
+    when set, else half of this machine's physical RAM.  DuckDB shares
+    the box with the engine's JVM and spills past its limit; uncapped
+    (default 80% of RAM) next to a large driver heap it overcommitted
+    physical memory and got the gate OOM-killed at sf10."""
+    env = os.environ.get("GATE_DUCK_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 >> 20}MiB"
+
 
 # Disjoint id namespaces for the unified directed graph.  100M spacing
 # keeps the ranges disjoint through ~sf60 (orderkeys grow ~1.5M per sf;

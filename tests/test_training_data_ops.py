@@ -3,6 +3,8 @@ similarity search, text analysis, multimodal plumbing."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
 
@@ -44,6 +46,25 @@ DOCS = [
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id bigint, text string").cache()
+
+
+# The set-similarity join core picks its regime from the vocabulary
+# size V alone (bitset popcount up to _BITSET_VOCAB_MAX, blocked
+# posting-run intersection up to _BLOCK_VOCAB_MAX, prefix filtering
+# above); moving the two bounds forces any regime on a small corpus.
+REGIME_BOUNDS = {
+    "bitset": (1 << 17, 1 << 17),
+    "blocked": (0, 1 << 17),
+    "prefix": (0, 0),
+}
+
+
+def force_regime(monkeypatch, regime: str) -> None:
+    from graphjet_spark.operators import dedup as dd
+
+    bitset_max, block_max = REGIME_BOUNDS[regime]
+    monkeypatch.setattr(dd, "_BITSET_VOCAB_MAX", bitset_max)
+    monkeypatch.setattr(dd, "_BLOCK_VOCAB_MAX", block_max)
 
 
 def test_exact_dedup(spark, docs):
@@ -174,13 +195,14 @@ def test_ngram_jaccard_prefix_filter_matches_bruteforce(spark):
         assert got == pytest.approx(want)
 
 
-def test_ngram_jaccard_sparse_and_dense_paths_agree(spark):
-    """The two regime plans — dense-vocab bitset popcount (V <= 256)
-    and sparse-vocab AllPairs/PPJoin prefix filtering — produce
-    identical pairs and values.  The sparse corpus draws from 400 token
-    types (forcing the prefix path); the same documents re-tokenized
-    into a <=256-type alias vocabulary take the bitset path; both are
-    checked against the brute-force oracle."""
+def test_ngram_jaccard_sparse_and_dense_paths_agree(spark, monkeypatch):
+    """The three regime plans — bitset popcount (V <= 256), blocked
+    posting-run intersection (V <= 2^17) and AllPairs/PPJoin prefix
+    filtering — produce identical pairs and values.  The sparse corpus
+    draws from 400 token types (the blocked regime by V, then the prefix
+    regime forced); the same documents re-tokenized into a <=256-type
+    alias vocabulary take the bitset regime; all are checked against
+    the brute-force oracle."""
     from graphjet_spark.operators import dedup as dd
 
     rng = np.random.default_rng(23)
@@ -205,12 +227,19 @@ def test_ngram_jaccard_sparse_and_dense_paths_agree(spark):
                 if round(j, 6) >= t:
                     want[(a, b)] = round(j, 6)
 
-    # 400 token types > _BITSET_VOCAB_MAX: the sparse prefix path runs
-    assert len(vocab) > dd._BITSET_VOCAB_MAX
-    got_sparse = {
+    # 400 token types sit between the two bounds: the blocked regime runs
+    assert dd._BITSET_VOCAB_MAX < len(vocab) <= dd._BLOCK_VOCAB_MAX
+    got_blocked = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in ngram_jaccard_pairs(docs, n=1, threshold=t).collect()
     }
+    assert got_blocked == pytest.approx(want)
+    with monkeypatch.context() as mp:
+        force_regime(mp, "prefix")
+        got_sparse = {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(docs, n=1, threshold=t).collect()
+        }
     assert got_sparse == pytest.approx(want)
 
     # alias every token into a 250-type vocabulary (preserving set
@@ -288,22 +317,23 @@ def test_dedup_keep_list_matches_union_find(spark):
         assert got == want
 
 
-def test_dedup_keep_list_delta_matches_full_recompute(spark):
+def test_dedup_keep_list_delta_matches_full_recompute(spark, monkeypatch):
     """Incremental keep-list maintenance (delta-ingest: quadratic pair
     work restricted to new x all) is row-identical to a full batch
-    recompute, in BOTH similarity regimes (dense-vocab bitset and
-    sparse-vocab prefix) and across several random batch splits —
-    including batches that bridge two previously separate clusters and
-    batches of exact dups of old docs."""
+    recompute, in every similarity regime (bitset, blocked, prefix —
+    forced through the vocabulary bounds) on a dense (30-type) and a
+    sparse (400-type) vocabulary and across several random batch
+    splits — including batches that bridge two previously separate
+    clusters and batches of exact dups of old docs."""
     from pyspark.sql import functions as F
 
-    from graphjet_spark.operators import dedup as dd
     from graphjet_spark.operators.dedup import dedup_keep_list_delta
 
-    for regime, nvocab in (("dense", 30), ("sparse", 400)):
-        rng = np.random.default_rng(7 if regime == "dense" else 8)
+    fulls = {}
+    for regime, nvocab in itertools.product(REGIME_BOUNDS, (30, 400)):
+        force_regime(monkeypatch, regime)
+        rng = np.random.default_rng(7 if nvocab == 30 else 8)
         vocab = [f"w{i}" for i in range(nvocab)]
-        assert (nvocab <= dd._BITSET_VOCAB_MAX) == (regime == "dense")
         base = [
             " ".join(
                 rng.choice(vocab, size=rng.integers(6, 14), replace=False)
@@ -320,6 +350,7 @@ def test_dedup_keep_list_delta_matches_full_recompute(spark):
             r["doc_id"]: r["keep_id"]
             for r in dedup_keep_list(docs, n=1, threshold=0.8).collect()
         }
+        assert fulls.setdefault(nvocab, full) == full, (regime, nvocab)
         for mod in (3, 7):
             new_ids = docs.filter(F.pmod("doc_id", F.lit(mod)) == 0).select(
                 "doc_id"
@@ -332,7 +363,7 @@ def test_dedup_keep_list_delta_matches_full_recompute(spark):
                     docs, new_ids, old_keeps, n=1, threshold=0.8
                 ).collect()
             }
-            assert got == full, (regime, mod)
+            assert got == full, (regime, nvocab, mod)
 
 
 def test_embedding_near_dups_lsh_planted_recall(spark):
@@ -1345,13 +1376,17 @@ def test_containment_pairs_mirror(spark, docs):
 
 
 def test_containment_regime_equality(spark, monkeypatch):
-    """The blocked in-task intersection path and the prefix-filtered
-    candidate path are the SAME census: identical qualifying pairs and
-    identical rounded values on a corpus with dup classes, subset
-    quotes, and containment ties."""
+    """Both set-similarity measures (Jaccard, containment) in all three
+    regimes (bitset, blocked, prefix) return the brute-force census:
+    identical qualifying pairs and identical rounded values, on a corpus
+    with dup classes, subset quotes and containment ties, and on a
+    corpus whose qualifying scores sit just under the threshold before
+    rounding (4/6 = 0.6666.. qualifies at 0.666667 with round_to=6 and
+    at 0.67 with round_to=2) — the prefix, size and positional bounds
+    must keep those pairs."""
     import graphjet_spark.operators.dedup as dd
 
-    corpus = [
+    ties = [
         (10, "a b c d"),
         (14, "a b c d"),          # dup class with 10
         (11, "a b c x"),
@@ -1360,25 +1395,58 @@ def test_containment_regime_equality(spark, monkeypatch):
         (13, "b c d z"),
         (15, "a b c d e f g h"),  # superset: 10/14 contained at 1.0
     ]
-    df = spark.createDataFrame(corpus, "doc_id bigint, text string")
+    boundary = [
+        (1, "a b c d e f"),
+        (2, "a b c d"),
+        (3, "a b c d g"),
+        (4, "a b c d h k"),
+        (5, "a b m n"),
+    ]
 
-    def census(df):
-        return sorted(
-            (r.doc_a, r.doc_b, r.containment)
-            for r in dd.containment_pairs(df, n=1, threshold=0.7).collect()
-        )
+    def brute(corpus, measure, t, round_to):
+        sets = {i: set(text.split()) for i, text in corpus}
+        want = {}
+        for a, sa in sets.items():
+            for b, sb in sets.items():
+                if a == b or (measure == "jaccard" and a > b):
+                    continue
+                i = len(sa & sb)
+                denom = len(sa | sb) if measure == "jaccard" else len(sa)
+                v = round(i / denom, round_to)
+                if v >= t:
+                    want[(a, b)] = v
+        return want
 
-    blocked = census(df)  # tiny vocab -> blocked regime
-    monkeypatch.setattr(dd, "_CONTAIN_BLOCK_VOCAB_MAX", 0)
-    prefix = census(df)
-    assert blocked == prefix and len(blocked) > 0
+    def engine(df, measure, t, round_to):
+        if measure == "jaccard":
+            out = dd.ngram_jaccard_pairs(df, n=1, threshold=t)
+        else:
+            out = dd.containment_pairs(df, n=1, threshold=t, round_to=round_to)
+        return {(r[0], r[1]): r[2] for r in out.collect()}
+
+    cases = [
+        (ties, "containment", 0.7, 6),
+        (ties, "jaccard", 0.5, 6),
+        (boundary, "jaccard", 0.666667, 6),
+        (boundary, "containment", 0.67, 2),
+    ]
+    for corpus, measure, t, round_to in cases:
+        df = spark.createDataFrame(corpus, "doc_id bigint, text string")
+        want = brute(corpus, measure, t, round_to)
+        assert want
+        for regime in REGIME_BOUNDS:
+            force_regime(monkeypatch, regime)
+            got = engine(df, measure, t, round_to)
+            assert got.keys() == want.keys(), (measure, t, regime)
+            for pair, v in want.items():
+                assert got[pair] == pytest.approx(v, abs=1e-9), (measure, regime)
 
 
 def test_containment_topk_matches_census_slice(spark, monkeypatch):
     """containment_topk == containment_pairs ranked by (containment
     DESC, doc_b ASC) and sliced per doc — exercised on ties at 1.0
     (intra-mate vs superset), cross-class ties at 0.75 with interleaved
-    doc ids, dup classes, and every k in 1..5; both vocab regimes."""
+    doc ids, dup classes, and every k in 1..5; all three regimes."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -1395,8 +1463,8 @@ def test_containment_topk_matches_census_slice(spark, monkeypatch):
     ]
     df = spark.createDataFrame(corpus, "doc_id bigint, text string")
     census = dd.containment_pairs(df, n=1, threshold=0.7)
-    for vocab_max in (dd._CONTAIN_BLOCK_VOCAB_MAX, 0):
-        monkeypatch.setattr(dd, "_CONTAIN_BLOCK_VOCAB_MAX", vocab_max)
+    for regime in REGIME_BOUNDS:
+        force_regime(monkeypatch, regime)
         for k in range(1, 6):
             w = Window.partitionBy("doc_a").orderBy(
                 F.desc("containment"), F.asc("doc_b")
@@ -1418,7 +1486,7 @@ def test_containment_topk_matches_census_slice(spark, monkeypatch):
                     ).collect(),
                 )
             )
-            assert got == want, (vocab_max, k)
+            assert got == want, (regime, k)
 
 
 def test_bm25_topk_mirror(spark, docs):

@@ -39,7 +39,10 @@ sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from graphjet_spark.session import get_spark  # noqa: E402
-from graphjet_spark.sources.testdata import TABLES  # noqa: E402
+from graphjet_spark.sources.testdata import (  # noqa: E402
+    TABLES,
+    duck_memory_limit,
+)
 
 
 # The oracle side shares the box with the engine's JVM heap; at soak
@@ -47,7 +50,7 @@ from graphjet_spark.sources.testdata import TABLES  # noqa: E402
 # plus a 48g driver heap overcommits physical memory (measured at
 # sf10: the gate's python grew to 77 GB RSS and the kernel OOM-killed
 # it mid-leg).  Cap DuckDB and let it spill instead.
-DUCK_MEM = os.environ.get("GATE_DUCK_MEM", "24GB")
+DUCK_MEM = duck_memory_limit()
 
 
 def duck_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -47,6 +47,7 @@ sys.path.insert(0, "/root/repo")
 from graphjet_spark.sources.testdata import (  # noqa: E402
     GRAPH_EDGES_SQL,
     TABLES,
+    duck_memory_limit,
 )
 
 PR_TOL = 1e-12
@@ -76,7 +77,7 @@ def _scatter(uids: np.ndarray, ids: np.ndarray, vals: np.ndarray, fill):
 
 def _load_edges_duckdb(sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
     con = duckdb.connect()
-    con.sql("SET memory_limit='24GB'")
+    con.sql(f"SET memory_limit='{duck_memory_limit()}'")
     for t in ("orders", "lineitem"):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     df = con.sql(
@@ -374,7 +375,7 @@ _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
 def _load_docs_duckdb(sf_dir: str):
     con = duckdb.connect()
-    con.sql("SET memory_limit='24GB'")
+    con.sql(f"SET memory_limit='{duck_memory_limit()}'")
     t = con.sql(
         f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet' ORDER BY doc_id"
     ).fetchnumpy()

@@ -12,7 +12,6 @@ Prints one line per twin: ``name: <secs>s rows=<n>`` or
 
 from __future__ import annotations
 
-import os
 import sys
 import threading
 import time
@@ -22,7 +21,10 @@ import duckdb
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from graphjet_spark.sources.testdata import TABLES  # noqa: E402
+from graphjet_spark.sources.testdata import (  # noqa: E402
+    TABLES,
+    duck_memory_limit,
+)
 
 
 def main() -> int:
@@ -35,9 +37,7 @@ def main() -> int:
             print(f"{name}: NO ORACLE", flush=True)
             continue
         con = duckdb.connect()
-        con.sql(
-            f"SET memory_limit='{os.environ.get('GATE_DUCK_MEM', '24GB')}'"
-        )
+        con.sql(f"SET memory_limit='{duck_memory_limit()}'")
         for t in TABLES:
             con.sql(
                 f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
